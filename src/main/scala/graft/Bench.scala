@@ -29,11 +29,8 @@ object Bench {
         .filter(f => f.isDirectory && f.getName.startsWith("graft_"))
         .map(_.getName).sorted
     if (sys.env.get("SPARK_GRAFT_CLEAR_STORES").exists(_ == "1")) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      graftStores().foreach(n => rm(new java.io.File(storeRoot, n)))
+      graftStores().foreach(n =>
+        graft.sources.IndexStore.deleteRecursively(new java.io.File(storeRoot, n)))
       System.err.println("[bench] cleared graft_* stores (SPARK_GRAFT_CLEAR_STORES=1)")
     }
     val preWarmStores = graftStores()

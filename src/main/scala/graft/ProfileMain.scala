@@ -24,8 +24,8 @@ import org.apache.spark.sql.streaming.Trigger
   * `--stream` runs the same profile algebra UNBOUNDED: `readStream`
   * over a parquet directory into
   * [[graft.streaming.StreamingProfile.windowedMoments]] (the Pébay
-  * single-buffer aggregator as incremental streaming state, watermark
-  * bounding it), drained with an AvailableNow trigger so the CLI
+  * moments kernel as incremental streaming state, watermark bounding
+  * it), drained with an AvailableNow trigger so the CLI
   * terminates after cataloging what has arrived — pointed at a growing
   * directory with a continuous trigger the identical plan runs forever.
   * The event-time column dispatches on its physical type exactly like

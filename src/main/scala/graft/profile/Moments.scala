@@ -7,8 +7,9 @@ package graft.profile
   * (reference: org/apache/flink/stats/StatsPojo.java:101-155 — mean merge
   * `u1 + n2*delta/(n1+n2)` at :142-146, M2/M3/M4 pairwise updates at
   * :119-147, NaN-aware min/max at :139-140 and :547-553), but implemented
-  * as an immutable Scala value class usable both driver-side and as the
-  * buffer of a Spark `Aggregator` (see [[ProfileAggregator]]).
+  * as an immutable Scala value class for driver-side folds and merges.
+  * The profilers run the same merge inside Spark as the [[MomentsAgg]]
+  * kernel; this fold is the reference the kernel is tested against.
   *
   * Invariants: `n == 0` implies mean=0, m2=m3=m4=0, min/max=NaN.
   */

@@ -17,10 +17,10 @@ import org.apache.spark.sql.types._
   * embarrassingly parallel with no data shuffle: only tiny aggregate
   * buffers cross the wire.
   *
-  * Moments come from Spark's built-in `var_pop`/`skewness`/`kurtosis`
-  * (Catalyst `CentralMomentAgg` — the same Pébay pairwise-merge math as
-  * the reference's StatsPojo.reduce, StatsPojo.java:101-155), and are
-  * algebraically reconstructed into raw (M2, M3, M4).
+  * Raw (M2, M3, M4) come straight from the [[MomentsAgg]] kernel (one
+  * order-4 Pébay buffer per column — the reference's StatsPojo.reduce,
+  * StatsPojo.java:101-155); count, mean, min and max from `count`,
+  * `avg`, `min` and `max`.
   */
 object NumericProfiler {
 
@@ -79,17 +79,9 @@ object NumericProfiler {
         min(dc).as(s"${p}min"),
         max(dc).as(s"${p}max"),
         avg(dc).as(s"${p}avg"),
-        var_pop(dc).as(s"${p}var_pop"),
-        skewness(dc).as(s"${p}skew"),
-        kurtosis(dc).as(s"${p}kurt"))
-      case None => Seq(
-        lit(0L).as(s"${p}n"),
-        lit(null).cast(DoubleType).as(s"${p}min"),
-        lit(null).cast(DoubleType).as(s"${p}max"),
-        lit(null).cast(DoubleType).as(s"${p}avg"),
-        lit(null).cast(DoubleType).as(s"${p}var_pop"),
-        lit(null).cast(DoubleType).as(s"${p}skew"),
-        lit(null).cast(DoubleType).as(s"${p}kurt"))
+        MomentsAgg.column(dc).as(s"${p}moments"))
+      // n = 0: parseRow reads no other moment column
+      case None => Seq(lit(0L).as(s"${p}n"))
     }
     val empty = f.dataType match {
       case StringType =>
@@ -113,35 +105,20 @@ object NumericProfiler {
     base ++ numeric ++ empty ++ len ++ census
   }
 
-  /** Reconstruct raw moments from Spark's (n, avg, var_pop, g1, g2ex)
-    * — inverse of §2.9's formulas: M2 = n*var_pop,
-    * M3 = g1*M2^1.5/sqrt(n), M4 = (g2ex+3)*M2^2/n. */
-  def momentsOf(n: Long, mean: Double, varPop: Double, g1: Double,
-      g2ex: Double, min: Double, max: Double): Moments = {
-    if (n == 0L) Moments.zero
-    else {
-      val m2 = varPop * n
-      val m3 =
-        if (m2 == 0.0 || g1.isNaN) 0.0
-        else g1 * math.pow(m2, 1.5) / math.sqrt(n.toDouble)
-      val m4 =
-        if (m2 == 0.0 || g2ex.isNaN) 0.0
-        else (g2ex + 3.0) * m2 * m2 / n
-      Moments(n, mean, m2, m3, m4, min, max)
-    }
-  }
-
   /** ONE job, ONE scan, zero shuffles (global partial+final aggregate):
     * basic stats + lengths + census + completeness for every column. */
-  def profile(df: DataFrame): TableProfile = {
+  def profile(df: DataFrame): TableProfile =
+    parseRow(aggregate(df).head(), df.schema)
+
+  /** The one-row global aggregate [[profile]] collects. */
+  def aggregate(df: DataFrame): DataFrame = {
     val schema = df.schema
     val aggCols =
       Seq(count(lit(1)).as("row_count"),
         sum(when(completePredicate(schema), 1L).otherwise(0L))
           .as("complete_records")) ++
         schema.fields.zipWithIndex.flatMap { case (f, i) => aggsFor(i, f) }
-    val row = df.agg(aggCols.head, aggCols.tail: _*).head()
-    parseRow(row, schema)
+    df.agg(aggCols.head, aggCols.tail: _*)
   }
 
   private def parseRow(row: Row, schema: StructType): TableProfile = {
@@ -159,8 +136,14 @@ object NumericProfiler {
     val cols = schema.fields.zipWithIndex.map { case (f, i) =>
       val p = s"c${i}_"
       val n = getL(s"${p}n")
-      val m = momentsOf(n, getD(s"${p}avg"), getD(s"${p}var_pop"),
-        getD(s"${p}skew"), getD(s"${p}kurt"), getD(s"${p}min"), getD(s"${p}max"))
+      val m =
+        if (n == 0L) Moments.zero
+        else {
+          val k = row.getStruct(row.fieldIndex(s"${p}moments"))
+          Moments(n, getD(s"${p}avg"), k.getAs[Double]("m2"),
+            k.getAs[Double]("m3"), k.getAs[Double]("m4"),
+            getD(s"${p}min"), getD(s"${p}max"))
+        }
       val census = f.dataType match {
         case StringType => Some(Census(
           getL(s"${p}boolean_values"), getL(s"${p}int_values"),

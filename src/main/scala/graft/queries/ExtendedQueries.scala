@@ -171,11 +171,11 @@ object ExtendedQueries {
       |FROM lineitem, w
       |GROUP BY 1, 2 ORDER BY bucket""".stripMargin
 
-  // ---- q31: streaming windowed moments (MomentsAggregator on a stream)
+  // ---- q31: streaming windowed moments (the MomentsAgg kernel on a stream)
 
-  /** The single-buffer Pébay aggregator maintained incrementally by
-    * Structured Streaming — variance/skew/kurtosis per event-time
-    * window, checked against a batch SQL oracle. */
+  /** The Pébay moments kernel maintained incrementally by Structured
+    * Streaming — variance/skew/kurtosis per event-time window, checked
+    * against a batch SQL oracle. */
   def streamMoments(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
     try spark.catalog.dropTempView("stream_moments_result") catch { case _: Throwable => () }
@@ -191,7 +191,7 @@ object ExtendedQueries {
         // mean and var_pop via exact integer micro-units — both are
         // terminating decimals of the 2-decimal data and land on the
         // .5e-6 rounding edge where float rounding is engine-specific
-        // (QueryUtil.centMean6 scaladoc). The Pébay aggregator stays in
+        // (QueryUtil.centMean6 scaladoc). The Pébay kernel stays in
         // the gate through `var_ok`: its float variance must agree with
         // the exact one to 1e-6 (the q72 within-bound pattern) — a
         // broken merge flips the boolean and fails the hash.

@@ -66,8 +66,12 @@ object IndexStore {
     * the write completed. */
   def hasSuccess(dir: File): Boolean = new File(dir, "_SUCCESS").exists()
 
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory)
+  /** Delete `f` and, when it is a real directory, everything under it.
+    * A symbolic link is removed itself and never entered, so a link in
+    * (or as) a store to a directory elsewhere leaves that directory's
+    * contents alone. */
+  def deleteRecursively(f: File): Unit = {
+    if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
       Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(); ()
   }

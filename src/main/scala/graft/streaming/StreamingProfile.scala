@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.profile.MomentsAggregator
+import graft.profile.MomentsAgg
 
 /** Structured Streaming windowed profiling — the unbounded variant of
   * the profile surface (the reference is batch-only; its merge algebra
@@ -13,8 +13,9 @@ import graft.profile.MomentsAggregator
   * Shapes supported:
   *  - [[windowedStats]]: event-time tumbling-window stats per key with
   *    a watermark bounding state;
-  *  - [[windowedMoments]]: same windows, full single-buffer moments via
-  *    [[MomentsAggregator]] (variance/skew/kurtosis on a stream).
+  *  - [[windowedMoments]]: same windows, full moments via the
+  *    [[MomentsAgg]] kernel the batch profiler uses (variance/skew/
+  *    kurtosis on a stream).
   *
   * At scale: state is hash-partitioned by (window, key); each micro-
   * batch shuffles only partial aggregates; the watermark expires state
@@ -45,25 +46,34 @@ object StreamingProfile {
         col("n_events"), col("avg_value"), col("sum_cents"),
         col("min_value"), col("max_value"), col("stddev_value"))
 
-  /** Full moments (M2/M3/M4 → var/skew/kurt) per window and key via the
-    * single-buffer [[MomentsAggregator]]. */
+  /** Full moments per window and key from the aggregates
+    * [[graft.profile.NumericProfiler]] runs per column (`count`, `avg`,
+    * `min`, `max`, [[MomentsAgg]]): the state is one fixed-width row.
+    * `var_pop`, `skew_pop` and `kurt_pop` keep
+    * [[graft.profile.DerivedStats]]' guards (NaN variance when n = 0,
+    * zero skewness and kurtosis when M2 = 0); the raw `m2`, `m3`, `m4`
+    * come last. `min`/`max` order NaN above every number, as Spark does. */
   def windowedMoments(
       events: DataFrame, tsCol: String, keyCol: String, valueCol: String,
-      windowLen: String = "1 hour", watermark: String = "10 minutes"): DataFrame =
+      windowLen: String = "1 hour", watermark: String = "10 minutes"): DataFrame = {
+    val v = col(valueCol).cast("double")
+    val cents = floor(col(valueCol) * lit(100d)).cast("long")
+    val (n, m2, m3, m4) = (col("n").cast("double"), col("m.m2"), col("m.m3"), col("m.m4"))
     events
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowLen).as("w"), col(keyCol))
-      .agg(MomentsAggregator.asColumn(col(valueCol).cast("double")).as("m"),
+      .agg(count(v).as("n"), avg(v).as("mean"), min(v).as("min"), max(v).as("max"),
+        MomentsAgg.column(v).as("m"),
         // exact integer moments beside the float state — gate means and
         // variances derive from them (money-valued moments land on
         // rounding edges; see windowedStats / QueryUtil.centMean6)
-        sum(floor(col(valueCol) * lit(100d)).cast("long")).as("sum_cents"),
-        sum((floor(col(valueCol) * lit(100d)).cast("long") *
-          floor(col(valueCol) * lit(100d)).cast("long"))).as("sum_cents2"))
+        sum(cents).as("sum_cents"),
+        sum(cents * cents).as("sum_cents2"))
       .select(col("w.start").as("window_start"), col(keyCol),
-        col("m.n").as("n"), col("m.mean").as("mean"),
-        col("sum_cents"), col("sum_cents2"),
-        col("m.var_pop").as("var_pop"), col("m.skew_pop").as("skew_pop"),
-        col("m.kurt_pop").as("kurt_pop"),
-        col("m.min").as("min"), col("m.max").as("max"))
+        col("n"), col("mean"), col("sum_cents"), col("sum_cents2"),
+        when(col("n") === 0L, lit(Double.NaN)).otherwise(m2 / n).as("var_pop"),
+        when(m2 === 0d, lit(0d)).otherwise(m3 * sqrt(n) / pow(m2, 1.5)).as("skew_pop"),
+        when(m2 === 0d, lit(0d)).otherwise(n * m4 / (m2 * m2)).as("kurt_pop"),
+        col("min"), col("max"), m2.as("m2"), m3.as("m3"), m4.as("m4"))
+  }
 }

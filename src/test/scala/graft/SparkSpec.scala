@@ -37,10 +37,7 @@ abstract class SparkSpec extends AnyFunSuite {
   def purgeDerivedStores(corpusDir: String): Unit = {
     val tag = graft.sources.IndexStore.pathTag(corpusDir)
     val root = new java.io.File(sys.props("java.io.tmpdir"))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete(); ()
-    }
+    val rm = graft.sources.IndexStore.deleteRecursively _
     Option(root.listFiles()).toSeq.flatten
       .filter(f => f.getName.startsWith("graft_") && f.getName.contains(tag))
       .foreach(rm)

@@ -1,7 +1,11 @@
 package graft.profile
 
+import java.sql.Timestamp
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.streaming.StreamingProfile
 
 /** Whole-table profiler vs hand-checkable data + reference-parity
   * fixture (the demo generator from jar/ProfileJob.java:44-65). */
@@ -67,21 +71,129 @@ class ProfileSpec extends SparkSpec {
       "global aggregate should not hash-shuffle row data")
   }
 
-  test("MomentsAggregator (udaf) agrees with built-in aggregates") {
+  /** Inputs the kernel must agree with the reference fold on: a real
+    * column and the edge cases of one window. */
+  private def kernelCases: Seq[(String, Seq[Option[Double]])] = {
+    val quantity = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .select(col("l_quantity").cast("double")).collect().toSeq
+      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+    Seq(
+      "l_quantity" -> quantity,
+      "empty" -> Seq.empty,
+      "all_null" -> Seq(None, None, None),
+      "single" -> Seq(Some(4.25)),
+      "constant" -> Seq.fill(5)(Some(0.1)),
+      "with_nan" -> Seq(Some(3.0), Some(Double.NaN), None, Some(-1.5)),
+      "skewed" -> Seq(1.0, 1.0, 1.0, 2.0, 10.0, 30.0).map(Some(_)))
+  }
+
+  /** n exactly; M2, M3, M4 within 1e-9 of n·σ^k (both NaN also agree). */
+  private def assertMoments(what: String, got: Moments, want: Moments): Unit = {
+    assert(got.n == want.n, s"$what: n ${got.n} vs ${want.n}")
+    Seq((2, got.m2, want.m2), (3, got.m3, want.m3), (4, got.m4, want.m4)).foreach {
+      case (k, g, w) =>
+        val scale = want.n * math.pow(DerivedStats.variancePop(want), k / 2.0)
+        assert((g.isNaN && w.isNaN) || g == w || math.abs(g - w) <= 1e-9 * scale,
+          s"$what: m$k $g vs $w")
+    }
+  }
+
+  /** `windowedMoments` over a MemoryStream, each case one key of one
+    * window, rows alternating between two micro-batches so the state
+    * merges; the final row per key. */
+  private def streamed(cases: Seq[(String, Seq[Option[Double]])]): Map[String, Row] = {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Timestamp, String, Option[Double])]
+    val sink = "kernel_moments_test"
+    val q = StreamingProfile.windowedMoments(input.toDF().toDF("ts", "key", "value"),
+        "ts", "key", "value", "10 minutes", "5 minutes")
+      .writeStream.format("memory").queryName(sink).outputMode("complete").start()
+    try {
+      val rows = cases.flatMap { case (k, vs) =>
+        vs.zipWithIndex.map { case (v, i) =>
+          (Timestamp.valueOf(f"2024-01-01 10:0${i % 10}%d:00"), k, v)
+        }
+      }
+      val (a, b) = rows.zipWithIndex.partition(_._2 % 2 == 0)
+      input.addData(a.map(_._1)); q.processAllAvailable()
+      input.addData(b.map(_._1)); q.processAllAvailable()
+      spark.table(sink).collect().map(r => r.getAs[String]("key") -> r).toMap
+    } finally q.stop()
+  }
+
+  private def rowMoments(r: Row): Moments = {
+    def d(c: String) = if (r.isNullAt(r.fieldIndex(c))) Double.NaN else r.getAs[Double](c)
+    Moments(r.getAs[Long]("n"), d("mean"), d("m2"), d("m3"), d("m4"), d("min"), d("max"))
+  }
+
+  test("moments kernel agrees with the reference fold, batch and streamed") {
+    val s = spark
+    import s.implicits._
+    val cases = kernelCases
+    val stream = streamed(cases)
+    cases.foreach { case (name, vs) =>
+      val want = Moments.of(vs.flatten)
+      val batch = NumericProfiler.profile(vs.toDF("v")).columns.head.moments
+      assertMoments(s"profile $name", batch, want)
+      if (vs.isEmpty) assert(!stream.contains(name), "an empty window emits no row")
+      else assertMoments(s"stream $name", rowMoments(stream(name)), want)
+    }
+    // min/max follow Spark's ordering (NaN above every number) in both
+    // profilers, where the reference fold lets NaN win both
+    val withNan = rowMoments(stream("with_nan"))
+    val batchNan = NumericProfiler.profile(cases.toMap.apply("with_nan").toDF("v"))
+      .columns.head.moments
+    Seq(withNan, batchNan).foreach { m =>
+      assert(m.min == -1.5 && m.max.isNaN, s"NaN ordering: $m")
+    }
+    assert(Moments.of(Seq(3.0, Double.NaN)).min.isNaN)
+  }
+
+  test("streamed var_pop, skew_pop and kurt_pop equal DerivedStats of the moments") {
+    def same(a: Double, b: Double) =
+      (a.isNaN && b.isNaN) || math.abs(a - b) <= 1e-12 * math.abs(b)
+    val stream = streamed(kernelCases)
+    assert(stream.size == kernelCases.size - 1)
+    stream.foreach { case (name, r) =>
+      val m = rowMoments(r)
+      Seq("var_pop" -> DerivedStats.variancePop(m), "skew_pop" -> DerivedStats.skewnessPop(m),
+          "kurt_pop" -> DerivedStats.kurtosisPop(m)).foreach { case (c, want) =>
+        assert(same(r.getAs[Double](c), want), s"$name: $c ${r.getAs[Double](c)} vs $want")
+      }
+    }
+    // the guards: n = 0 gives a NaN variance, M2 = 0 zero skew and kurtosis
+    assert(stream("all_null").getAs[Double]("var_pop").isNaN)
+    Seq("all_null", "single", "constant").foreach { k =>
+      assert(stream(k).getAs[Double]("skew_pop") == 0.0 && stream(k).getAs[Double]("kurt_pop") == 0.0)
+    }
+  }
+
+  test("one moments kernel: both profilers plan HashAggregate, no object or sort aggregate") {
+    def assertHashOnly(what: String, plan: String): Unit = {
+      assert(plan.contains("HashAggregate"), s"$what: no HashAggregate\n$plan")
+      assert(!plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate"),
+        s"$what: object or sort aggregate\n$plan")
+    }
     val df = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val viaAgg = df.agg(
-      MomentsAggregator.asColumn(col("l_quantity").cast("double")).as("m"))
-      .select("m.n", "m.mean", "m.var_pop", "m.skew_pop", "m.min", "m.max").head()
-    val viaBuiltin = df.agg(
-      count(col("l_quantity")), avg(col("l_quantity")),
-      var_pop(col("l_quantity")), skewness(col("l_quantity")),
-      min(col("l_quantity")).cast("double"), max(col("l_quantity")).cast("double")).head()
-    assert(viaAgg.getLong(0) == viaBuiltin.getLong(0))
-    assert(math.abs(viaAgg.getDouble(1) - viaBuiltin.getDouble(1)) < 1e-9)
-    assert(math.abs(viaAgg.getDouble(2) - viaBuiltin.getDouble(2)) < 1e-6)
-    assert(math.abs(viaAgg.getDouble(3) - viaBuiltin.getDouble(3)) < 1e-6)
-    assert(viaAgg.getDouble(4) == viaBuiltin.getDouble(4))
-    assert(viaAgg.getDouble(5) == viaBuiltin.getDouble(5))
+    assertHashOnly("NumericProfiler.profile",
+      NumericProfiler.aggregate(df).queryExecution.executedPlan.toString)
+
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Timestamp, String, Double)]
+    val q = StreamingProfile.windowedMoments(input.toDF().toDF("ts", "key", "value"),
+        "ts", "key", "value", "10 minutes", "5 minutes")
+      .writeStream.format("memory").queryName("kernel_plan_test").outputMode("update").start()
+    try {
+      input.addData((Timestamp.valueOf("2024-01-01 10:01:00"), "a", 1.0))
+      q.processAllAvailable()
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(q.explain())
+      assertHashOnly("windowedMoments", out.toString("UTF-8"))
+    } finally q.stop()
   }
 
   test("value render parity quirks (CastUtils conventions)") {

@@ -44,40 +44,38 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: no spark output")
             n_fail += 1
             continue
+        # each relation is built once: its columns and types come from
+        # the bound plan, and fetchall() is the only execution
         try:
-            oracle = con.execute(sql)
-            ocols = [d[0] for d in oracle.description]
+            oracle = con.sql(sql)
+            ocols, otypes = oracle.columns, [str(t) for t in oracle.types]
             orows = oracle.fetchall()
-            otypes = dict(zip(con.sql(f"SELECT * FROM ({sql}) LIMIT 0").columns,
-                              [str(t) for t in con.sql(f"SELECT * FROM ({sql}) LIMIT 0").types]))
         except Exception as e:
             print(f"FAIL {name}: oracle error: {e}")
             n_fail += 1
             continue
-        got = con.execute(
-            f"SELECT * FROM read_parquet({spark_glob!r})")
-        gcols = [d[0] for d in got.description]
+        got = con.sql(f"SELECT * FROM read_parquet({spark_glob!r})")
+        gcols, gtypes = got.columns, [str(t) for t in got.types]
         grows = got.fetchall()
+        # sort columns by name, as the gate does; same-named columns
+        # keep their relative order
+        oidx = [i for _, i in sorted((c, i) for i, c in enumerate(ocols))]
+        gidx = [i for _, i in sorted((c, i) for i, c in enumerate(gcols))]
+        if sorted(ocols) != sorted(gcols):
+            print(f"FAIL {name}: schema mismatch\n  oracle={sorted(ocols)}\n  spark ={sorted(gcols)}")
+            n_fail += 1
+            continue
         # strict type parity: the driver's hash is computed over TYPED
         # values (HUGEINT/DECIMAL materialize differently than BIGINT in
         # arrow/pandas even when the integer values are equal — the
         # r10-r12 q281/q302 driver-only reds were exactly an uncast
         # window-sum HUGEINT). fetchall() hides this (python ints), so
-        # check types explicitly.
-        grel = con.sql(f"SELECT * FROM read_parquet({spark_glob!r}) LIMIT 0")
-        gtypes = dict(zip(grel.columns, [str(t) for t in grel.types]))
-        tdiff = {c: (otypes.get(c), gtypes.get(c))
-                 for c in set(otypes) | set(gtypes)
-                 if otypes.get(c) != gtypes.get(c)}
+        # check types explicitly, position by position in name order,
+        # so a second column of the same name is checked too.
+        tdiff = [(ocols[i], otypes[i], gtypes[j])
+                 for i, j in zip(oidx, gidx) if otypes[i] != gtypes[j]]
         if tdiff:
             print(f"FAIL {name}: column type mismatch (oracle vs spark): {tdiff}")
-            n_fail += 1
-            continue
-        # sort columns by name (the driver's convention)
-        oidx = [i for _, i in sorted((c, i) for i, c in enumerate(ocols))]
-        gidx = [i for _, i in sorted((c, i) for i, c in enumerate(gcols))]
-        if sorted(ocols) != sorted(gcols):
-            print(f"FAIL {name}: schema mismatch\n  oracle={sorted(ocols)}\n  spark ={sorted(gcols)}")
             n_fail += 1
             continue
         o_n = [[norm(r[i]) for i in oidx] for r in orows]
