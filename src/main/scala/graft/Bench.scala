@@ -24,16 +24,20 @@ object Bench {
     // run stamps how many stores it inherited and prints/records each
     // build it pays (IndexStore.buildLog + the "stores" JSON field).
     val storeRoot = new java.io.File(sys.props("java.io.tmpdir"))
-    def graftStores(): Seq[String] =
-      Option(storeRoot.listFiles()).toSeq.flatten
+    System.err.println(s"[bench] java.io.tmpdir = $storeRoot")
+    def graftStores(root: java.io.File): Seq[java.io.File] =
+      Option(root.listFiles()).toSeq.flatten
         .filter(f => f.isDirectory && f.getName.startsWith("graft_"))
-        .map(_.getName).sorted
+        .sortBy(_.getName)
     if (sys.env.get("SPARK_GRAFT_CLEAR_STORES").exists(_ == "1")) {
-      graftStores().foreach(n =>
-        graft.sources.IndexStore.deleteRecursively(new java.io.File(storeRoot, n)))
-      System.err.println("[bench] cleared graft_* stores (SPARK_GRAFT_CLEAR_STORES=1)")
+      // build.sbt picks the tmpdir (/dev/shm or /tmp) by free space at
+      // project load, so stores built under the other root are
+      // stranded there: sweep both roots, not just this run's.
+      val roots = (storeRoot +: Seq("/dev/shm", "/tmp").map(new java.io.File(_))).distinct
+      roots.flatMap(graftStores).foreach(graft.sources.IndexStore.deleteRecursively)
+      System.err.println(s"[bench] cleared graft_* stores under ${roots.mkString(", ")} (SPARK_GRAFT_CLEAR_STORES=1)")
     }
-    val preWarmStores = graftStores()
+    val preWarmStores = graftStores(storeRoot)
     System.err.println(s"[bench] ${preWarmStores.size} graft_* stores pre-existing (warm) under $storeRoot")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -8,9 +8,8 @@ import org.apache.spark.sql.types.StringType
   *
   *   job 1 — [[NumericProfiler.profile]]: every column's basic stats +
   *           lengths + census + completeness, one scan, zero shuffles.
-  *   job 2 — [[TopK.topKValuesAll]]: all string columns' top-K values,
-  *           one melted aggregation.
-  *   job 3 — [[TopK.topKPatternsAll]]: ditto for patterns.
+  *   job 2 — [[TopK.topKAll]]: all string columns' top-K values AND
+  *           patterns, one scan, one aggregation, collected once.
   *
   * vs the reference's 1 + #columns source passes and per-column
   * parallelism-1 sort stages. Histogram bin width (Scott's rule with the
@@ -24,29 +23,19 @@ object ProfileRunner {
     val strCols = df.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
     if (strCols.isEmpty) base
     else {
-      val values = TopK.topKValuesAll(df, strCols, topK).collect()
-        .groupBy(_.getAs[String]("col_name"))
+      val tops = TopK.topKAll(df, strCols, topK).collect()
+        .groupBy(r => (r.getAs[String]("kind"), r.getAs[String]("col_name")))
         .view.mapValues(_.sortBy(_.getAs[Int]("rank"))
-          .map(r => (r.getAs[String]("value"), r.getAs[Long]("cnt"))).toSeq)
+          .map(r => (r.getAs[String]("key"), r.getAs[Long]("cnt"))).toSeq)
         .toMap
-      val patterns = TopK.topKPatternsAll(df, strCols, topK).collect()
-        .groupBy(_.getAs[String]("col_name"))
-        .view.mapValues(_.sortBy(_.getAs[Int]("rank"))
-          .map(r => (r.getAs[String]("pattern"), r.getAs[Long]("cnt"))).toSeq)
-        .toMap
+      def top(kind: String, c: String) = tops.getOrElse((kind, c), Nil)
       base.copy(columns = base.columns.map { cp =>
         cp.copy(
-          topValues = values.getOrElse(cp.name, Nil),
-          topPatterns = patterns.getOrElse(cp.name, Nil))
+          topValues = top(TopK.Value, cp.name),
+          topPatterns = top(TopK.Pattern, cp.name))
       })
     }
   }
-
-  /** Bin-width recommendations per numeric column (name -> (width, reliable)). */
-  def binWidths(tp: TableProfile): Map[String, (Double, Boolean)] =
-    tp.columns.filter(_.moments.n > 0).map { cp =>
-      cp.name -> DerivedStats.scottBinWidth(cp.moments, cp.rowCount)
-    }.toMap
 
   def report(df: DataFrame, topK: Int = 20): String = {
     val tp = profile(df, topK)

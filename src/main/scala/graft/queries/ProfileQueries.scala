@@ -234,10 +234,12 @@ object ProfileQueries {
   }
 
   // ---- q07/q08: top-K values & patterns ------------------------------
+  // The trailing limit is a no-op on the k ranked rows; it orders them
+  // with TakeOrderedAndProject instead of a range-partitioned global sort.
 
   def topValues(spark: SparkSession, dir: String): DataFrame =
-    TopK.topKValues(table(spark, dir, "part"), "p_brand", 20)
-      .orderBy(desc("cnt"), asc("value"))
+    TopK.topKValuesAll(table(spark, dir, "part"), Seq("p_brand"), 20)
+      .select("value", "cnt").orderBy(desc("cnt"), asc("value")).limit(20)
 
   val topValuesSql: String =
     """SELECT p_brand AS value, count(*) AS cnt FROM part
@@ -245,8 +247,8 @@ object ProfileQueries {
       |GROUP BY p_brand ORDER BY cnt DESC, value ASC LIMIT 20""".stripMargin
 
   def topPatterns(spark: SparkSession, dir: String): DataFrame =
-    TopK.topKPatterns(table(spark, dir, "customer"), "c_name", 20)
-      .orderBy(desc("cnt"), asc("pattern"))
+    TopK.topKPatternsAll(table(spark, dir, "customer"), Seq("c_name"), 20)
+      .select("pattern", "cnt").orderBy(desc("cnt"), asc("pattern")).limit(20)
 
   /** DuckDB mirror of the reference mask (StringStatsTuple.java:24-46):
     * chained global regex replaces after strip_accents. Order matters:

@@ -1,10 +1,16 @@
 package graft.profile
 
 import java.sql.Timestamp
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import graft.SparkSpec
+import graft.functions.PatternMask
 import graft.streaming.StreamingProfile
 
 /** Whole-table profiler vs hand-checkable data + reference-parity
@@ -194,6 +200,69 @@ class ProfileSpec extends SparkSpec {
       Console.withOut(out)(q.explain())
       assertHashOnly("windowedMoments", out.toString("UTF-8"))
     } finally q.stop()
+  }
+
+  /** Both top-K lists by driver replay: a plain `groupBy` per column
+    * counts the values, pattern counts fold `PatternMask.mask` over
+    * those, ranked by (cnt desc, key asc). Rows (kind, col_name, key,
+    * cnt, rank), sorted by kind, column and rank. */
+  private def replayTopK(df: DataFrame, cols: Seq[String], k: Int) =
+    cols.flatMap { c =>
+      val vc = df.filter(col(c).isNotNull).groupBy(col(c)).count().collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+      val pc = vc.groupMapReduce(v => PatternMask.mask(v._1))(_._2)(_ + _).toSeq
+      def ranked(kind: String, m: Seq[(String, Long)]) =
+        m.sortBy { case (v, n) => (-n, v) }.take(k).zipWithIndex
+          .map { case ((v, n), i) => (kind, c, v, n, i + 1) }
+      ranked(TopK.Value, vc) ++ ranked(TopK.Pattern, pc)
+    }.sortBy(t => (t._1, t._2, t._5))
+
+  test("topKAll equals a driver replay of both top-K lists; the views keep their columns") {
+    val s = spark
+    import s.implicits._
+    // ties at the k = 1 boundary (values x/y/X/Q, patterns a/A), nulls,
+    // blank strings, accented values that share a pattern
+    val a = Seq("x", "y", "X", "Q").flatMap(Seq.fill(3)(_)) ++
+      Seq("Zé", "Zé", "Ze", "", "", " ", "\t", null, null, "café 1")
+    val b = Seq("É1", "É1", "E1", "E1", "12-3", "ab", "ab", "Ab", "", null, " ",
+      "ñ/ü:.'", null, "#x", "Ü", "U", "u", "ü")
+    val df = a.zipAll(b, null, null).toDF("a", "b")
+    val cols = Seq("a", "b")
+    for (k <- Seq(1, 20)) {
+      val want = replayTopK(df, cols, k)
+      val got = TopK.topKAll(df, cols, k).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3), r.getInt(4)))
+        .toSeq.sortBy(t => (t._1, t._2, t._5))
+      assert(got == want, s"k = $k")
+      for ((kind, view) <- Seq(TopK.Value -> TopK.topKValuesAll(df, cols, k),
+          TopK.Pattern -> TopK.topKPatternsAll(df, cols, k))) {
+        assert(view.columns.toSeq == Seq("col_name", kind, "cnt", "rank"))
+        val rows = view.collect().map(r =>
+          (kind, r.getString(0), r.getString(1), r.getLong(2), r.getInt(3)))
+        assert(rows.toSeq.sortBy(t => (t._2, t._5)) == want.filter(_._1 == kind), s"$kind, k = $k")
+      }
+    }
+  }
+
+  test("topKAll plans one scan and one row-level aggregate exchange") {
+    val df = spark.read.parquet(s"$sfDir/customer.parquet")
+    val strCols = df.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
+    val q = TopK.topKAll(df, strCols, 20)
+    q.collect()
+    val plan = q.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = helper.collect(plan) { case s: FileSourceScanExec => s }
+    // partition keys of each exchange: (kind, col_name, key) feeds the
+    // aggregate, (kind, col_name) the window
+    val keys = helper.collect(plan) { case e: ShuffleExchangeExec =>
+      e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).toSet
+        case p => Set(p.toString)
+      }
+    }
+    assert(scans.size == 1, s"expected 1 scan, got ${scans.size}:\n$plan")
+    assert(keys.count(_ == Set("kind", "col_name", "key")) == 1 && keys.size == 2,
+      s"expected one aggregate and one window exchange, got $keys:\n$plan")
   }
 
   test("value render parity quirks (CastUtils conventions)") {
