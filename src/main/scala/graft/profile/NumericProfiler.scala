@@ -21,19 +21,29 @@ import org.apache.spark.sql.types._
   * order-4 Pébay buffer per column — the reference's StatsPojo.reduce,
   * StatsPojo.java:101-155); count, mean, min and max from `count`,
   * `avg`, `min` and `max`.
+  *
+  * A column gets only the aggregates that apply to its type: no
+  * constant columns stand in for a moment, length, empty count or
+  * census it does not have, and [[profile]] reads a missing one as it
+  * reads a null one. Columns are resolved by quoted name
+  * ([[column]]), so any name a table can carry profiles.
   */
 object NumericProfiler {
+
+  /** The column named `name`, quoted: dots, spaces and backticks in
+    * the name are part of it, never a field path or SQL syntax. */
+  def column(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   /** Double-cast rule (reference: CastUtils.java:47-65): numerics cast,
     * Date/Timestamp -> epoch millis, String/Boolean -> not numeric.
     * Deviation (documented fix of reference bug #3): Float/Decimal
     * profile numerically instead of throwing. */
   def numericValue(name: String, dt: DataType): Option[Column] = dt match {
-    case _: NumericType => Some(col(name).cast(DoubleType))
+    case _: NumericType => Some(column(name).cast(DoubleType))
     case TimestampType | TimestampNTZType =>
-      Some(unix_millis(col(name).cast(TimestampType)).cast(DoubleType))
+      Some(unix_millis(column(name).cast(TimestampType)).cast(DoubleType))
     case DateType =>
-      Some(unix_millis(col(name).cast(TimestampType)).cast(DoubleType))
+      Some(unix_millis(column(name).cast(TimestampType)).cast(DoubleType))
     case _ => None
   }
 
@@ -41,19 +51,22 @@ object NumericProfiler {
     * use length, booleans 4/5, integers decimal-string length,
     * floating-point the Calcite-style render ([[ValueRender]]),
     * Date/Timestamp no length. */
-  def renderLength(name: String, dt: DataType): Option[Column] = dt match {
-    case StringType => Some(length(col(name)))
-    case BooleanType => Some(when(col(name), 4).otherwise(5))
-    case ByteType | ShortType | IntegerType | LongType =>
-      Some(length(col(name).cast(StringType)))
-    case DoubleType =>
-      Some(graft.functions.RenderLength.double_render_length(col(name)))
-    case FloatType =>
-      Some(graft.functions.RenderLength.float_render_length(col(name)))
-    case _: DecimalType =>
-      Some(graft.functions.RenderLength.decimal_render_length(col(name).cast(StringType)))
-    case DateType | TimestampType | TimestampNTZType => None
-    case _ => None
+  def renderLength(name: String, dt: DataType): Option[Column] = {
+    val c = column(name)
+    dt match {
+      case _: StringType => Some(length(c))
+      case BooleanType => Some(when(c, 4).otherwise(5))
+      case ByteType | ShortType | IntegerType | LongType =>
+        Some(length(c.cast(StringType)))
+      case DoubleType =>
+        Some(graft.functions.RenderLength.double_render_length(c))
+      case FloatType =>
+        Some(graft.functions.RenderLength.float_render_length(c))
+      case _: DecimalType =>
+        Some(graft.functions.RenderLength.decimal_render_length(c.cast(StringType)))
+      case DateType | TimestampType | TimestampNTZType => None
+      case _ => None
+    }
   }
 
   /** Whole-row completeness predicate: every field non-null and its
@@ -61,48 +74,35 @@ object NumericProfiler {
     * RowStatsCollectHelper.java:31-38). */
   def completePredicate(schema: StructType): Column =
     schema.fields.map { f =>
-      val base = col(f.name).isNotNull
+      val c = column(f.name)
       f.dataType match {
-        case StringType => base && trim(col(f.name)) =!= ""
-        case _ => base
+        case _: StringType => c.isNotNull && trim(c) =!= ""
+        case _ => c.isNotNull
       }
     }.reduce(_ && _)
 
-  /** All aggregate columns for one field, stable `c{i}_` prefixes. */
+  /** The aggregate columns that apply to one field, stable `c{i}_`
+    * prefixes. */
   def aggsFor(i: Int, f: StructField): Seq[Column] = {
     val p = s"c${i}_"
-    val c = col(f.name)
-    val base = Seq(count(c).as(s"${p}nonnull"))
-    val numeric = numericValue(f.name, f.dataType) match {
-      case Some(dc) => Seq(
-        count(dc).as(s"${p}n"),
-        min(dc).as(s"${p}min"),
-        max(dc).as(s"${p}max"),
-        avg(dc).as(s"${p}avg"),
-        MomentsAgg.column(dc).as(s"${p}moments"))
-      // n = 0: parseRow reads no other moment column
-      case None => Seq(lit(0L).as(s"${p}n"))
+    val c = column(f.name)
+    val numeric = numericValue(f.name, f.dataType).toSeq.flatMap(dc => Seq(
+      count(dc).as(s"${p}n"),
+      min(dc).as(s"${p}min"),
+      max(dc).as(s"${p}max"),
+      avg(dc).as(s"${p}avg"),
+      MomentsAgg.column(dc).as(s"${p}moments")))
+    val len = renderLength(f.name, f.dataType).toSeq.flatMap(lc => Seq(
+      min(lc).cast(LongType).as(s"${p}len_min"),
+      max(lc).cast(LongType).as(s"${p}len_max"),
+      avg(lc).as(s"${p}len_avg")))
+    val string = f.dataType match {
+      case _: StringType =>
+        sum(when(trim(c) === "", 1L).otherwise(0L)).as(s"${p}empty") +:
+          TypeCensus.censusAggs(f.name, p)
+      case _ => Nil
     }
-    val empty = f.dataType match {
-      case StringType =>
-        Seq(sum(when(trim(c) === "", 1L).otherwise(0L)).as(s"${p}empty"))
-      case _ => Seq(lit(0L).as(s"${p}empty"))
-    }
-    val len = renderLength(f.name, f.dataType) match {
-      case Some(lc) => Seq(
-        min(lc).cast(LongType).as(s"${p}len_min"),
-        max(lc).cast(LongType).as(s"${p}len_max"),
-        avg(lc).as(s"${p}len_avg"))
-      case None => Seq(
-        lit(null).cast(LongType).as(s"${p}len_min"),
-        lit(null).cast(LongType).as(s"${p}len_max"),
-        lit(null).cast(DoubleType).as(s"${p}len_avg"))
-    }
-    val census = f.dataType match {
-      case StringType => TypeCensus.censusAggs(f.name, p)
-      case _ => TypeCensus.counterNames.map(k => lit(null).cast(LongType).as(s"$p$k"))
-    }
-    base ++ numeric ++ empty ++ len ++ census
+    count(c).as(s"${p}nonnull") +: (numeric ++ len ++ string)
   }
 
   /** ONE job, ONE scan, zero shuffles (global partial+final aggregate):
@@ -122,15 +122,12 @@ object NumericProfiler {
   }
 
   private def parseRow(row: Row, schema: StructType): TableProfile = {
-    def getL(name: String): Long =
-      if (row.isNullAt(row.fieldIndex(name))) 0L else row.getAs[Long](name)
-    def getD(name: String): Double =
-      if (row.isNullAt(row.fieldIndex(name))) Double.NaN
-      else row.getAs[Double](name)
-    def optL(name: String): Option[Long] =
-      if (row.isNullAt(row.fieldIndex(name))) None else Some(row.getAs[Long](name))
-    def optD(name: String): Option[Double] =
-      if (row.isNullAt(row.fieldIndex(name))) None else Some(row.getAs[Double](name))
+    // a column aggsFor did not emit reads as a null one
+    val at = row.schema.fieldNames.zipWithIndex.toMap
+    def opt[T](name: String): Option[T] =
+      at.get(name).filterNot(row.isNullAt(_)).map(row.getAs[T](_))
+    def getL(name: String): Long = opt[Long](name).getOrElse(0L)
+    def getD(name: String): Double = opt[Double](name).getOrElse(Double.NaN)
 
     val rowCount = getL("row_count")
     val cols = schema.fields.zipWithIndex.map { case (f, i) =>
@@ -145,7 +142,7 @@ object NumericProfiler {
             getD(s"${p}min"), getD(s"${p}max"))
         }
       val census = f.dataType match {
-        case StringType => Some(Census(
+        case _: StringType => Some(Census(
           getL(s"${p}boolean_values"), getL(s"${p}int_values"),
           getL(s"${p}long_values"), getL(s"${p}float_values"),
           getL(s"${p}double_values"), getL(s"${p}date_values")))
@@ -158,9 +155,9 @@ object NumericProfiler {
         nullValues = rowCount - getL(s"${p}nonnull"),
         emptyStrings = getL(s"${p}empty"),
         moments = m,
-        minLength = optL(s"${p}len_min"),
-        maxLength = optL(s"${p}len_max"),
-        avgLength = optD(s"${p}len_avg"),
+        minLength = opt[Long](s"${p}len_min"),
+        maxLength = opt[Long](s"${p}len_max"),
+        avgLength = opt[Double](s"${p}len_avg"),
         census = census)
     }
     TableProfile(rowCount, getL("complete_records"), cols.toSeq)

@@ -1,7 +1,7 @@
 package graft.profile
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{StringType, StructField}
 
 /** Facade reproducing the reference's whole job
   * (jar/ProfileJob.java:78-162) Spark-first:
@@ -20,7 +20,7 @@ object ProfileRunner {
 
   def profile(df: DataFrame, topK: Int = 20): TableProfile = {
     val base = NumericProfiler.profile(df)
-    val strCols = df.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
+    val strCols = df.schema.fields.collect { case StructField(n, _: StringType, _, _) => n }.toSeq
     if (strCols.isEmpty) base
     else {
       val tops = TopK.topKAll(df, strCols, topK).collect()

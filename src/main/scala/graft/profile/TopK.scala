@@ -43,7 +43,7 @@ object TopK {
     * Output: (kind, col_name, key, cnt, rank). */
   def topKAll(df: DataFrame, strCols: Seq[String], k: Int = 20): DataFrame = {
     val args = strCols.flatMap { c =>
-      val v = col(c).cast("string")
+      val v = NumericProfiler.column(c).cast("string")
       Seq(lit(Value), lit(c), v, lit(Pattern), lit(c), PatternMask.pattern_mask(v))
     }
     val counts = df.select(stack((lit(2 * strCols.size) +: args): _*)

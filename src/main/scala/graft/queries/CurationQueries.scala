@@ -2328,7 +2328,9 @@ object CurationQueries {
       // the corpus explode+distinct inside the batch (the r12 driver
       // bench read q174 at 58 s/rep where the same binary served 3.5 s
       // elsewhere). A checkpoint IS the data: every batch plans against
-      // an un-evictable LogicalRDD leaf, recompute is impossible.
+      // a LogicalRDD leaf whose blocks spill to disk rather than drop, so
+      // the batch never recomputes it (a lost block fails the query).
+      // Its blocks are released once the audit is materialized.
       val trainSet = graft.Partitioning.spread(
           batch.filter(pmod(col("doc_id"), lit(NovEvalMod)) =!= 0),
           col("doc_id"))
@@ -2337,39 +2339,41 @@ object CurationQueries {
         .select(Hashing.h60(col("sh")).as("h")).distinct()
         .withColumn("seen", lit(1))
         .localCheckpoint(true)
-      val schema = batch.schema
-      val src = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      // spread BEFORE the shingle explode: the single-file bench corpus
-      // scans as one input split, so without it the whole eval-side
-      // shingle transform runs as ONE task inside the micro-batch
-      // (probe: 1 task, 1.24 s of the 1.56 s batch). The narrow
-      // repartition moves only the small eval slice (1/17th of docs);
-      // at scale a micro-batch spans many files and the exchange is
-      // equally harmless.
-      val ev = graft.Partitioning.spread(
-          src.filter(pmod(col("doc_id"), lit(NovEvalMod)) === 0), col("doc_id"))
-        .select(col("doc_id"), col("source"),
-          explode(Hashing.wordShingles(lower(trim(col("text"))), NovGramK))
-            .as("sh"))
-        .select(col("doc_id"), col("source"), Hashing.h60(col("sh")).as("h"))
-      try spark.catalog.dropTempView("stream_novelty_result")
-      catch { case _: Throwable => () }
-      val q = ev.join(trainSet, Seq("h"), "left_outer")
-        .groupBy("doc_id", "source")
-        .agg(count(lit(1)).as("n_grams"),
-          sum(when(col("seen").isNull, 1L).otherwise(0L)).as("n_novel"))
-        .writeStream.format("memory").queryName("stream_novelty_result")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      QueryUtil.awaitOrFail(q)
-      val out = spark.table("stream_novelty_result")
-        .select(col("doc_id"), col("source"), col("n_grams"), col("n_novel"))
-        .withColumn("novelty_pm", expr("(1000 * n_novel) div n_grams"))
-        .orderBy("doc_id")
-        .localCheckpoint()
-      out
+      try {
+        val schema = batch.schema
+        val src = spark.readStream.schema(schema)
+          .option("pathGlobFilter", "documents.parquet").parquet(dir)
+        // spread BEFORE the shingle explode: the single-file bench corpus
+        // scans as one input split, so without it the whole eval-side
+        // shingle transform runs as ONE task inside the micro-batch
+        // (probe: 1 task, 1.24 s of the 1.56 s batch). The narrow
+        // repartition moves only the small eval slice (1/17th of docs);
+        // at scale a micro-batch spans many files and the exchange is
+        // equally harmless.
+        val ev = graft.Partitioning.spread(
+            src.filter(pmod(col("doc_id"), lit(NovEvalMod)) === 0), col("doc_id"))
+          .select(col("doc_id"), col("source"),
+            explode(Hashing.wordShingles(lower(trim(col("text"))), NovGramK))
+              .as("sh"))
+          .select(col("doc_id"), col("source"), Hashing.h60(col("sh")).as("h"))
+        try spark.catalog.dropTempView("stream_novelty_result")
+        catch { case _: Throwable => () }
+        val q = ev.join(trainSet, Seq("h"), "left_outer")
+          .groupBy("doc_id", "source")
+          .agg(count(lit(1)).as("n_grams"),
+            sum(when(col("seen").isNull, 1L).otherwise(0L)).as("n_novel"))
+          .writeStream.format("memory").queryName("stream_novelty_result")
+          .outputMode("complete")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        QueryUtil.awaitOrFail(q)
+        val out = spark.table("stream_novelty_result")
+          .select(col("doc_id"), col("source"), col("n_grams"), col("n_novel"))
+          .withColumn("novelty_pm", expr("(1000 * n_novel) div n_grams"))
+          .orderBy("doc_id")
+          .localCheckpoint()
+        out
+      } finally QueryUtil.releaseCheckpoint(trainSet)
     }
 
   def streamNoveltyAuditSql: String = noveltyAuditSql

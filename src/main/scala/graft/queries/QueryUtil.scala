@@ -213,4 +213,13 @@ object QueryUtil {
           s"${StreamDrainTimeoutMs / 1000} s — refusing to read a " +
           "possibly-partial memory sink")
     }
+
+  /** Frees the blocks of a `localCheckpoint`ed DataFrame: its plan is a
+    * `LogicalRDD` over the checkpointed RDD, which otherwise lingers
+    * until the context cleaner collects it. */
+  def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }

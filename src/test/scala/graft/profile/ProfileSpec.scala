@@ -2,12 +2,14 @@ package graft.profile
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{GetTimestamp, Lower, ParseToTimestamp, RLike}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlShims
 import org.apache.spark.sql.types.StringType
 import graft.SparkSpec
 import graft.functions.PatternMask
@@ -300,4 +302,152 @@ class ProfileSpec extends SparkSpec {
     val sigma = DerivedStats.stddevPop(m)
     assert(math.abs(w - math.floor(3.49 * sigma * math.pow(1000, -1.0 / 3))) < 1e-9)
   }
+
+  // ---- the census kernel ----------------------------------------------
+
+  /** The Spark SQL census predicates as they were spliced into the
+    * profile aggregate before the kernel, built from [[TypeCensus]]'s
+    * constants with the regex backslashes escaped for the SQL literal:
+    * per counter, `eligible AND predicate` over column `c`. */
+  private def sqlCensus(c: String): Seq[String] = {
+    def rx(r: String) = s"regexp_like($c, '${r.replace("\\", "\\\\")}')"
+    val dec = s"try_cast($c as decimal(38,0))"
+    val dates = TypeCensus.dateShapes.map { case (shape, fmts, _) =>
+      val parses = fmts.map(f => s"try_to_timestamp($c, '$f') IS NOT NULL").mkString(" OR ")
+      s"(${rx(shape)} AND ($parses))"
+    }.mkString("(", " OR ", ")")
+    Seq(s"(lower($c) = 'true')",
+      s"(${rx(TypeCensus.intRegex)} AND $dec BETWEEN ${Int.MinValue} AND ${Int.MaxValue})",
+      s"(${rx(TypeCensus.intRegex)} AND $dec BETWEEN ${Long.MinValue} AND ${Long.MaxValue})",
+      s"(${rx(TypeCensus.floatRegex)})", s"(${rx(TypeCensus.floatRegex)})", dates)
+      .map(p => s"($c IS NOT NULL AND trim($c) <> '') AND $p")
+  }
+
+  /** Edge values, date-shaped strings with invalid days and months, and
+    * seeded fuzz over the characters the census grammars use. */
+  private def censusInputs: Seq[String] = {
+    val edges = Seq(null, "", " ", "   ", "\t", "\n", "true", "TRUE", "tRuE", " true", "true ",
+      "false", "truee", "1", "-1", "+1", "-", "+", "0", "-0", "123\n", "123\r\n", "123 ",
+      "\n123", " 123", "123 ", "１２３", "٣", "00000000000000000000000000000000000000000123",
+      "1" + "0" * 38, "1" + "0" * 37, "1.5", ".5", "5.", "1e5", "1E+5", "1e-5", "1.5f", "2D",
+      "NaN", "Infinity", "-Infinity", "+NaN", "nan", "inf", "1e", "e5", ".", "..5", "1..5",
+      "C19", "u001234", "x5", "12a45", "1,5", "0x1F", "2024-02-29", "2023-02-29", "2024-13-01",
+      "2024-00-10", "2024-01-32", "20240229", "20231301", "2024/02/29", "29/02/2024",
+      "02/29/2024", "13/13/2024", "31-12-1999", "12-31-1999", "2024-01-01\n", "20240101 ",
+      "2024-01-01 ", " 2024-01-01", "2024-01-01\r\n", "2024-01-01\u2028", "20240101\u0085",
+      "31/12/1999\r", "123\u2028", "2024-1-1", "99999999", "00000000", "0001-01-01",
+      "9999-12-31") ++
+      Seq(Int.MinValue, Int.MaxValue).flatMap(b => Seq(BigInt(b) - 1, BigInt(b), BigInt(b) + 1)).map(_.toString) ++
+      Seq(Long.MinValue, Long.MaxValue).flatMap(b => Seq(BigInt(b) - 1, BigInt(b), BigInt(b) + 1)).map(_.toString)
+    val rnd = new scala.util.Random(20261018L)
+    val shapes = Seq("%04d-%02d-%02d", "%04d%02d%02d", "%04d/%02d/%02d", "%02d/%02d/%04d",
+      "%02d-%02d-%04d")
+    val dates = (1 to 3000).map { i =>
+      val (y, m, d) = (rnd.nextInt(10000), rnd.nextInt(15), rnd.nextInt(34))
+      val f = shapes(i % shapes.size)
+      if (f.startsWith("%04d")) f.format(y, m, d) else f.format(d, m, y)
+    }
+    val alphabet = "0123456789+-.eEfFdD/ \n".toSeq.map(_.toString) ++ Seq("tRuE", "NaN", "x")
+    val fuzz = (1 to 20000).map { _ =>
+      Seq.fill(rnd.nextInt(14))(alphabet(rnd.nextInt(alphabet.size))).mkString
+    }
+    edges ++ dates ++ fuzz
+  }
+
+  test("census kernel equals the SQL census predicates, value by value") {
+    val s = spark
+    import s.implicits._
+    val inputs = censusInputs
+    val conf = spark.conf
+    for ((zone, policy) <- Seq("UTC" -> "CORRECTED", "America/Los_Angeles" -> "CORRECTED",
+        "Asia/Kolkata" -> "LEGACY")) {
+      val saved = Seq("spark.sql.session.timeZone", "spark.sql.legacy.timeParserPolicy")
+        .map(k => k -> conf.getOption(k))
+      conf.set("spark.sql.session.timeZone", zone)
+      conf.set("spark.sql.legacy.timeParserPolicy", policy)
+      try {
+        val df = inputs.zipWithIndex.toDF("s", "id").repartition(4)
+        val bits = sqlCensus("s").map(p => when(expr(p), 1).otherwise(0))
+        val kernel = TypeCensus.censusAggs("s")
+        val masks = df.select(col("id"), col("s"),
+          SqlShims.column(CensusMask(SqlShims.expression(col("s")))).as("mask"),
+          bits.zipWithIndex.map { case (b, i) => shiftleft(b, i) }.reduce(_ bitwiseOR _).as("sql"))
+        val bad = masks.filter(col("mask") =!= col("sql")).collect()
+        assert(bad.isEmpty, s"$zone/$policy: ${bad.length} mismatches, e.g. " +
+          bad.take(5).map(r => s"'${r.getString(1)}' kernel ${r.getInt(2)} sql ${r.getInt(3)}")
+            .mkString(", "))
+        // the aggregate form sums the same bits
+        val sums = df.agg(kernel.head, kernel.tail: _*).head()
+        val want = sqlCensus("s").map(p => sum(when(expr(p), 1L).otherwise(0L)))
+        assert(sums.toSeq == df.agg(want.head, want.tail: _*).head().toSeq, s"$zone/$policy")
+      } finally saved.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
+      }
+    }
+  }
+
+  test("census: letters are not float digits; decimal literals are") {
+    val s = spark
+    import s.implicits._
+    def census(vs: Seq[String]) = NumericProfiler.profile(vs.toDF("v")).columns.head.census.get
+    val letters = census(Seq("C19", "u001234", "x5", "12a45"))
+    assert(letters.floatValues == 0 && letters.doubleValues == 0, letters)
+    val decimals = census(Seq("1.5", ".5", "5.", "1e5", "NaN"))
+    assert(decimals.floatValues == 5 && decimals.doubleValues == 5, decimals)
+  }
+
+  test("the profile aggregate plans one census kernel per string column and no SQL census") {
+    val df = spark.read.parquet(s"$sfDir/customer.parquet")
+    val strCols = df.schema.fields.filter(_.dataType == StringType).map(_.name).toSet
+    assert(strCols.nonEmpty)
+    val agg = NumericProfiler.aggregate(df)
+    val exprs = agg.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e => e
+    }))
+    val kernels = exprs.collect { case m: CensusMask => m.child }
+    assert(kernels.flatMap(_.references.map(_.name)).toSet == strCols &&
+      kernels.map(_.canonicalized).distinct.size == strCols.size, kernels)
+    val sqlCensusParts = exprs.collect {
+      case e @ (_: RLike | _: GetTimestamp | _: ParseToTimestamp | _: Lower) => e
+    }
+    assert(sqlCensusParts.isEmpty, sqlCensusParts)
+    // codegen evaluates each kernel once per row, not once per counter
+    agg.collect()
+    val code = org.apache.spark.sql.execution.debug.codegenString(agg.queryExecution.executedPlan)
+    assert("\\.mask\\(".r.findAllIn(code).size == strCols.size, code)
+  }
+
+  test("profiles columns named with spaces, dots, backticks and non-ASCII letters") {
+    val s = spark
+    import s.implicits._
+    val rows = Seq(("3", 1), ("x.y", 2), ("", 3), (null, 4), ("2024-01-31", 5), ("3", 6))
+    def stats(tp: TableProfile) = tp.columns.map(_.copy(name = ""))
+    val plain = ProfileRunner.profile(rows.toDF("plain", "plain_n"))
+    val failures = Seq("a b", "a.b", "a`b", "ünï").flatMap { name =>
+      scala.util.Try {
+        val df = rows.toDF(name, s"${name}_n")
+        val tp = ProfileRunner.profile(df)
+        assert(tp.columns.map(_.name) == Seq(name, s"${name}_n"))
+        assert(tp.copy(columns = stats(tp)) == plain.copy(columns = stats(plain)))
+        assert(ProfileRunner.report(df).contains(name))
+      }.failed.toOption.map(e => s"'$name': ${e.toString.linesIterator.next()}")
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("a collated string column profiles as the same data in a plain string") {
+    val s = spark
+    import s.implicits._
+    val vs = Seq("a", "A", "a", "TRUE", "true", " ", "", null, "12", "B1", "b1", "2024-01-31")
+    val plain = vs.toDF("v")
+    val lcase = plain.select(col("v").cast(StringType("UTF8_LCASE")).as("v"))
+    assert(lcase.schema.head.dataType != StringType)
+    val want = ProfileRunner.profile(plain).columns.head
+    val got = ProfileRunner.profile(lcase).columns.head
+    assert(got.dataType == "string collate UTF8_LCASE")
+    assert(got.copy(dataType = want.dataType) == want)
+    assert(got.census.isDefined && got.topValues.nonEmpty)
+  }
+
 }
