@@ -27,7 +27,14 @@ object MisraGries {
 
   type Counters = Map[String, Long]
 
-  final class MGAggregator(k: Int) extends Aggregator[String, Counters, Counters] {
+  final case class MGEntry(hkey: String, mg_count: Long)
+
+  /** The summary as an `Aggregator` with a columnar (array-of-struct)
+    * result, so a streaming query's sink table reads it back. Entries
+    * sort by key so the emitted array is deterministic given the
+    * (merge-order-dependent) counter state. */
+  final class MGEntriesAggregator(k: Int)
+      extends Aggregator[String, Counters, Seq[MGEntry]] {
     require(k >= 2)
 
     def zero: Counters = Map.empty
@@ -53,10 +60,12 @@ object MisraGries {
         m.updated(key, m.getOrElse(key, 0L) + n)
       })
 
-    def finish(m: Counters): Counters = m
+    def finish(m: Counters): Seq[MGEntry] =
+      m.toSeq.sortBy(_._1).map { case (key, n) => MGEntry(key, n) }
 
     def bufferEncoder: Encoder[Counters] = Encoders.kryo[Counters]
-    def outputEncoder: Encoder[Counters] = Encoders.kryo[Counters]
+    def outputEncoder: Encoder[Seq[MGEntry]] =
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[MGEntry]]()
   }
 
   /** One-pass candidate summary of `df.keyCol` (≤ k entries; superset
@@ -64,25 +73,6 @@ object MisraGries {
     * design — it is the whole point of the sketch that it fits there. */
   def candidates(df: DataFrame, keyCol: String, k: Int): Counters =
     df.select(col(keyCol)).as(Encoders.STRING)
-      .select(new MGAggregator(k).toColumn).head()
-
-  final case class MGEntry(hkey: String, mg_count: Long)
-
-  /** [[MGAggregator]] with a columnar (array-of-struct) result instead
-    * of a kryo blob — the form a STREAMING query needs, where the
-    * summary lands in a sink table and must be readable back. Entries
-    * sort by key so the emitted array is deterministic given the
-    * (merge-order-dependent) counter state. */
-  final class MGEntriesAggregator(k: Int)
-      extends Aggregator[String, Counters, Seq[MGEntry]] {
-    private val inner = new MGAggregator(k)
-    def zero: Counters = inner.zero
-    def reduce(m: Counters, key: String): Counters = inner.reduce(m, key)
-    def merge(a: Counters, b: Counters): Counters = inner.merge(a, b)
-    def finish(m: Counters): Seq[MGEntry] =
-      m.toSeq.sortBy(_._1).map { case (key, n) => MGEntry(key, n) }
-    def bufferEncoder: Encoder[Counters] = Encoders.kryo[Counters]
-    def outputEncoder: Encoder[Seq[MGEntry]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[MGEntry]]()
-  }
+      .select(new MGEntriesAggregator(k).toColumn).head()
+      .map(e => e.hkey -> e.mg_count).toMap
 }

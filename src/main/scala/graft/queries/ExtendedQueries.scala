@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.profile.{DerivedStats, NumericProfiler}
 import QueryUtil._
 
 /** Coverage of the reference's declared-TODO surface
@@ -125,30 +126,21 @@ object ExtendedQueries {
 
   /** The reference's declared histogram intent (TODO
     * jar/ProfileJob.java:69) joined with its bin-width recommendation
-    * (jar/ProfileJob.java:146-162): a two-phase plan — tiny stats
-    * aggregate (count, stddev_pop, skewness) broadcast back over the
-    * scan, `floor(3.49·σ·n^(-1/3))` with the ×0.4/0.6/0.7 skew
-    * correction, then width_bucket-style grouping. Both phases are
-    * deterministic scalar math, so the oracle mirrors them exactly. */
+    * (jar/ProfileJob.java:146-162): a two-phase plan. The stats phase is
+    * a collected [[NumericProfiler.profile]] of the column that runs
+    * when the query is built; its moments and row count give
+    * [[DerivedStats.scottBinWidth]] (`floor(3.49·σ·n^(-1/3))` with the
+    * ×0.4/0.6/0.7 skew correction). The query then groups the scan by
+    * `floor(x / width)`. Both phases are deterministic scalar math, so
+    * the oracle mirrors them exactly. */
   def scottHistogram(spark: SparkSession, dir: String): DataFrame = {
     val li = table(spark, dir, "lineitem")
-    val c = col("l_extendedprice")
-    val stats = li.agg(
-      count(lit(1)).as("n"),
-      stddev_pop(c).as("sd"),
-      skewness(c).as("sk"))
-    val width = {
-      val base = floor(lit(3.49) * col("sd") * pow(col("n"), lit(-1.0 / 3.0)))
-      val sk = ceil(col("sk"))
-      when(sk === 1.0, base * 0.4)
-        .when(sk === 2.0, base * 0.6)
-        .when(sk === 3.0, base * 0.7)
-        .otherwise(base)
-    }
-    li.crossJoin(broadcast(stats.select(width.as("w"))))
-      .groupBy(floor(c / col("w")).cast("long").as("bucket"), col("w").as("bin_width"))
+    val c = "l_extendedprice"
+    val stats = NumericProfiler.profile(li.select(c)).columns.head
+    val (w, _) = DerivedStats.scottBinWidth(stats.moments, stats.rowCount)
+    li.groupBy(floor(col(c) / lit(w)).cast("long").as("bucket"))
       .agg(count(lit(1)).as("cnt"))
-      .select(col("bucket"), r6(col("bin_width")).as("bin_width"), col("cnt"))
+      .select(col("bucket"), r6(lit(w)).as("bin_width"), col("cnt"))
       .orderBy("bucket")
   }
 

@@ -2818,17 +2818,7 @@ object PipelineQueries {
       .withColumn("event_ts", QueryUtil.eventTs(schema, "ts"))
     // memory-sink table name must be fresh if re-run in one session
     try spark.catalog.dropTempView("events_stream_result") catch { case _: Throwable => () }
-    val agg = graft.streaming.StreamingProfile.windowedStats(
-        src, "event_ts", "event_type", "value", "1 hour", "10 minutes")
-      .select(
-        unix_seconds(col("window_start")).as("hour_epoch"),
-        col("event_type"), col("n_events"),
-        // gate mean via exact integer micro-units (QueryUtil.centMean6)
-        QueryUtil.centMean6("sum_cents", "n_events").as("avg_value"),
-        r6(col("stddev_value")).as("stddev_value"),
-        r6(col("min_value")).as("min_value"),
-        r6(col("max_value")).as("max_value"))
-    val q = agg.writeStream
+    val q = eventsWindowProfile(src).writeStream
       .format("memory").queryName("events_stream_result")
       .outputMode("complete")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -2837,10 +2827,27 @@ object PipelineQueries {
     spark.table("events_stream_result").orderBy("hour_epoch", "event_type")
   }
 
+  /** q30's hourly profile per event type: a projection of
+    * [[graft.streaming.StreamingProfile.windowedMoments]] over events
+    * carrying an `event_ts` column (a stream or a batch frame).
+    * `n_events` counts the non-null values, and `stddev_value` is
+    * √`var_pop`. */
+  def eventsWindowProfile(events: DataFrame): DataFrame =
+    graft.streaming.StreamingProfile.windowedMoments(
+        events, "event_ts", "event_type", "value", "1 hour", "10 minutes")
+      .select(
+        unix_seconds(col("window_start")).as("hour_epoch"),
+        col("event_type"), col("n").as("n_events"),
+        // gate mean via exact integer micro-units (QueryUtil.centMean6)
+        QueryUtil.centMean6("sum_cents", "n").as("avg_value"),
+        r6(sqrt(col("var_pop"))).as("stddev_value"),
+        r6(col("min")).as("min_value"),
+        r6(col("max")).as("max_value"))
+
   val eventsStreamSql: String =
     s"""SELECT epoch(date_trunc('hour', ts))::BIGINT AS hour_epoch,
-       |  event_type, count(*) AS n_events,
-       |  ${QueryUtil.centMean6Sql("sum(floor(value * 100)::BIGINT)", "count(*)")}
+       |  event_type, count(value) AS n_events,
+       |  ${QueryUtil.centMean6Sql("sum(floor(value * 100)::BIGINT)", "count(value)")}
        |    AS avg_value,
        |  round(stddev_pop(value), 6) AS stddev_value,
        |  round(min(value), 6) AS min_value,

@@ -1,51 +1,68 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.profile.{NumericProfiler, TopK, TypeCensus}
+import org.apache.spark.sql.types._
+import graft.profile.{MomentsAgg, NumericProfiler, TopK, TypeCensus}
 import QueryUtil._
 
 /** The descriptive-statistics query surface (the reference's core
   * capability), each with a DuckDB oracle built from the same constants.
+  * The profile queries are projections of the library's aggregates
+  * ([[NumericProfiler.aggregate]], [[TopK]], [[TypeCensus]]), so the
+  * oracle checks the kernels the profiler runs.
   */
 object ProfileQueries {
+
+  // ---- long format of the profile aggregate --------------------------
+
+  /** One `(col_name, metrics…)` row per column of `names`, ordered by
+    * name: `stack` unpivots the one-row [[NumericProfiler.aggregate]]
+    * `agg`, column i's cells being `cells(i)` in `metrics` order.
+    * Catalyst prunes the aggregates no cell reads. */
+  private def unpivot(agg: DataFrame, names: Seq[String], metrics: Seq[String])(
+      cells: Int => Seq[Column]): DataFrame = {
+    val args = names.zipWithIndex.flatMap { case (c, i) => lit(c) +: cells(i) }
+    agg.select(stack((lit(names.size) +: args): _*).as("col_name" +: metrics))
+      .orderBy("col_name")
+  }
+
+  /** Column i's [[MomentsAgg.derived]] moments, null where Spark's
+    * built-in aggregates are null: `var_samp` below two values, the
+    * others below one (the library reports NaN or 0 there). */
+  private def momentCells(i: Int): Map[String, Column] = {
+    val n = col(s"c${i}_n")
+    MomentsAgg.derived(n, col(s"c${i}_moments")).map { case (k, v) =>
+      k -> when(n > (if (k == "var_samp") 1L else 0L), v)
+    }
+  }
 
   // ---- q02: single-pass numeric profile of lineitem ------------------
 
   val profileCols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
-  /** One scan, one global aggregate for ALL columns, then unpivot to
-    * long format driver-free via `stack` (SURVEY.md §3.2's one-pass
-    * design vs the reference's O(cols) rescans). */
+  val numericMetrics = Seq("n_rows", "n", "vmin", "vmax", "vavg",
+    "var_pop", "var_samp", "stddev_pop", "skew_pop", "kurt_pop")
+
+  /** q02's statistics of every (numeric) column of `df`, unrounded: one
+    * scan, one global aggregate for ALL columns, then unpivot to long
+    * format driver-free (SURVEY.md §3.2's one-pass design vs the
+    * reference's O(cols) rescans). */
+  def numericStats(df: DataFrame): DataFrame =
+    unpivot(NumericProfiler.aggregate(df), df.columns.toSeq, numericMetrics) { i =>
+      val p = s"c${i}_"
+      val m = momentCells(i)
+      Seq(col("row_count"), col(s"${p}n"), col(s"${p}min"), col(s"${p}max"),
+        col(s"${p}avg"), m("var_pop"), m("var_samp"), m("stddev_pop"),
+        m("skew_pop"), m("kurt_pop"))
+    }
+
   def profileNumeric(spark: SparkSession, dir: String): DataFrame = {
     val li = table(spark, dir, "lineitem")
-    val aggs = profileCols.zipWithIndex.flatMap { case (c, i) =>
-      val dc = col(c).cast("double")
-      val p = s"c${i}_"
-      Seq(
-        count(lit(1)).as(s"${p}n_rows"),
-        count(dc).as(s"${p}n"),
-        r6(min(dc)).as(s"${p}vmin"),
-        r6(max(dc)).as(s"${p}vmax"),
-        r6(avg(dc)).as(s"${p}vavg"),
-        r6(var_pop(dc)).as(s"${p}var_pop"),
-        r6(var_samp(dc)).as(s"${p}var_samp"),
-        r6(stddev_pop(dc)).as(s"${p}stddev_pop"),
-        r6(when(var_pop(dc) === 0d, 0d).otherwise(skewness(dc))).as(s"${p}skew_pop"),
-        // Spark kurtosis is EXCESS kurtosis; reference reports raw
-        // population kurtosis (StatsPojo.java:243-248) => +3.
-        r6(when(var_pop(dc) === 0d, 0d).otherwise(kurtosis(dc) + lit(3d))).as(s"${p}kurt_pop"))
-    }
-    val one = li.agg(aggs.head, aggs.tail: _*)
-    val metrics = Seq("n_rows", "n", "vmin", "vmax", "vavg", "var_pop",
-      "var_samp", "stddev_pop", "skew_pop", "kurt_pop")
-    val stackArgs = profileCols.zipWithIndex.flatMap { case (c, i) =>
-      lit(c) +: metrics.map(m => col(s"c${i}_$m"))
-    }
-    one.select(stack(
-        (lit(profileCols.size) +: stackArgs): _*
-      ).as("col_name" +: metrics))
-      .orderBy("col_name")
+    val stats = numericStats(li.select(profileCols.map(col): _*))
+    stats.select(stats.schema.fields.map { f =>
+      if (f.dataType == DoubleType) r6(col(f.name)).as(f.name) else col(f.name)
+    }: _*)
   }
 
   def profileNumericSql: String = {
@@ -68,61 +85,45 @@ object ProfileQueries {
   // ---- q03: mixed-type whole-table profile of orders -----------------
 
   /** Full-surface single-pass profile over a mixed-type table: null /
-    * empty tallies, epoch-millis numeric stats for timestamps
-    * (CastUtils.java:60-62 parity), and length stats for strings. */
+    * empty tallies, epoch-day numeric stats for dates and timestamps,
+    * and length stats for strings. */
   def profileOrders(spark: SparkSession, dir: String): DataFrame = {
     val df = table(spark, dir, "orders")
-    val fields = df.schema.fields.toSeq
-    val aggCols = fields.zipWithIndex.flatMap { case (f, i) =>
-      val p = s"c${i}_"
-      val c = col(f.name)
-      val isStr = f.dataType.typeName == "string"
-      // Date/timestamp columns profile as epoch DAYS here (not the
-      // library's reference-parity epoch millis): day counts are exact
-      // small integers, so sums of squares stay inside the double's 53
-      // exact bits and var/stddev are bit-identical across engines —
-      // epoch-millis second moments (~1e23) are not.
-      val dcOpt = f.dataType.typeName match {
-        case "timestamp" | "timestamp_ntz" | "date" =>
-          // FLOOR division (not `div`, which truncates toward zero):
-          // DuckDB's // floors, so pre-1970 epochs would otherwise be
-          // one day off between engine and oracle. (x - pmod(x, d)) is
-          // the largest multiple of d ≤ x, exact in long arithmetic —
-          // no double-precision detour for ~1e12 millis.
-          Some({
-            val m = s"unix_millis(cast(`${f.name}` as timestamp))"
-            expr(s"($m - pmod($m, 86400000)) div 86400000").cast("double")
-          })
-        case _ => NumericProfiler.numericValue(f.name, f.dataType)
+    // Date/timestamp columns profile as epoch DAYS here (not the
+    // library's reference-parity epoch millis), projected in front of
+    // the kernel: day counts are exact small integers, so sums of
+    // squares stay inside the double's 53 exact bits and var/stddev are
+    // bit-identical across engines — epoch-millis second moments
+    // (~1e23) are not. FLOOR division (not `div`, which truncates
+    // toward zero): DuckDB's // floors, so pre-1970 epochs would
+    // otherwise be one day off between engine and oracle. (x - pmod(x,
+    // d)) is the largest multiple of d ≤ x, exact in long arithmetic —
+    // no double-precision detour for ~1e12 millis.
+    val input = df.select(df.schema.fields.toSeq.map { f =>
+      f.dataType match {
+        case DateType | TimestampType | TimestampNTZType =>
+          val m = s"unix_millis(cast(`${f.name}` as timestamp))"
+          expr(s"($m - pmod($m, 86400000)) div 86400000").cast("double").as(f.name)
+        case _ => NumericProfiler.column(f.name)
       }
-      val dc = dcOpt.getOrElse(lit(null).cast("double"))
-      Seq(
-        count(lit(1)).as(s"${p}n_rows"),
-        count(c).as(s"${p}nonnull"),
-        (if (isStr) sum(when(trim(c) === "", 1L).otherwise(0L)) else lit(0L))
-          .as(s"${p}empty"),
-        count(dc).as(s"${p}n"),
-        r6(min(dc)).as(s"${p}vmin"),
-        r6(max(dc)).as(s"${p}vmax"),
-        r6(avg(dc)).as(s"${p}vavg"),
-        r6(stddev_pop(dc)).as(s"${p}stddev_pop"),
-        (if (isStr) min(length(c)).cast("long") else lit(null).cast("long"))
-          .as(s"${p}len_min"),
-        (if (isStr) max(length(c)).cast("long") else lit(null).cast("long"))
-          .as(s"${p}len_max"),
-        (if (isStr) r6(avg(length(c))) else lit(null).cast("double"))
-          .as(s"${p}len_avg"))
-    }
-    val one = df.agg(aggCols.head, aggCols.tail: _*)
+    }: _*)
     val metrics = Seq("n_rows", "nonnull", "empty", "n", "vmin", "vmax",
       "vavg", "stddev_pop", "len_min", "len_max", "len_avg")
-    val stackArgs = fields.zipWithIndex.flatMap { case (f, i) =>
-      lit(f.name) +: metrics.map(m => col(s"c${i}_$m"))
+    unpivot(NumericProfiler.aggregate(input), df.columns.toSeq, metrics) { i =>
+      val p = s"c${i}_"
+      val dt = input.schema(i).dataType
+      val (numeric, string) = (dt.isInstanceOf[NumericType], dt.isInstanceOf[StringType])
+      def cell(on: Boolean, name: String, otherwise: Column): Column =
+        if (on) col(p + name) else otherwise
+      val (nullL, nullD) = (lit(null).cast(LongType), lit(null).cast(DoubleType))
+      Seq(col("row_count"), col(s"${p}nonnull"),
+        cell(string, "empty", lit(0L)), cell(numeric, "n", lit(0L)),
+        r6(cell(numeric, "min", nullD)), r6(cell(numeric, "max", nullD)),
+        r6(cell(numeric, "avg", nullD)),
+        r6(if (numeric) momentCells(i)("stddev_pop") else nullD),
+        cell(string, "len_min", nullL), cell(string, "len_max", nullL),
+        r6(cell(string, "len_avg", nullD)))
     }
-    one.select(stack(
-        (lit(fields.size) +: stackArgs): _*
-      ).as("col_name" +: metrics))
-      .orderBy("col_name")
   }
 
   def profileOrdersSql: String = {
@@ -179,23 +180,10 @@ object ProfileQueries {
   val lengthCols = Seq("p_name", "p_brand", "p_type")
 
   def lengthStats(spark: SparkSession, dir: String): DataFrame = {
-    val df = table(spark, dir, "part")
-    val aggs = lengthCols.zipWithIndex.flatMap { case (c, i) =>
-      val p = s"c${i}_"
-      Seq(
-        min(length(col(c))).cast("long").as(s"${p}len_min"),
-        max(length(col(c))).cast("long").as(s"${p}len_max"),
-        r6(avg(length(col(c)))).as(s"${p}len_avg"))
+    val df = table(spark, dir, "part").select(lengthCols.map(col): _*)
+    unpivot(NumericProfiler.aggregate(df), lengthCols, Seq("len_min", "len_max", "len_avg")) {
+      i => Seq(col(s"c${i}_len_min"), col(s"c${i}_len_max"), r6(col(s"c${i}_len_avg")))
     }
-    val one = df.agg(aggs.head, aggs.tail: _*)
-    val metrics = Seq("len_min", "len_max", "len_avg")
-    val stackArgs = lengthCols.zipWithIndex.flatMap { case (c, i) =>
-      lit(c) +: metrics.map(m => col(s"c${i}_$m"))
-    }
-    one.select(stack(
-        (lit(lengthCols.size) +: stackArgs): _*
-      ).as("col_name" +: metrics))
-      .orderBy("col_name")
   }
 
   val lengthStatsSql: String =

@@ -450,4 +450,54 @@ class ProfileSpec extends SparkSpec {
     assert(got.census.isDefined && got.topValues.nonEmpty)
   }
 
+  test("q02's projection of the profile aggregate equals Spark's built-in moments, nulls included") {
+    val s = spark
+    import s.implicits._
+    val (nan, inf) = (Double.NaN, Double.PositiveInfinity)
+    val rows: Seq[(Option[Double], Option[Double], Option[Double], Option[Double], Option[Double])] =
+      Seq(
+        (None, Some(3.25), Some(0.1), Some(1.5), Some(1.0)),
+        (None, None, Some(0.1), Some(2.0), Some(nan)),
+        (None, None, Some(0.1), Some(4.25), Some(inf)),
+        (None, None, Some(0.1), Some(8.0), Some(-inf)),
+        (None, None, Some(0.1), Some(16.5), Some(2.0)),
+        (None, None, Some(0.1), Some(7.75), None),
+        (None, None, Some(0.1), Some(-3.0), Some(5.0)))
+    val names = Seq("all_null", "one_value", "constant", "regular", "nan_inf")
+    val df = rows.toDF(names: _*)
+    val got = graft.queries.ProfileQueries.numericStats(df).collect()
+    assert(got.map(_.getString(0)).toSeq == names.sorted)
+    // the parent q02's aggregates: Spark's built-in moments, skewness
+    // and kurtosis zeroed at zero variance, kurtosis raised by 3
+    def builtIn(c: String) = {
+      val dc = col(c)
+      df.agg(count(lit(1)), count(dc), min(dc), max(dc), avg(dc), var_pop(dc),
+        var_samp(dc), stddev_pop(dc),
+        when(var_pop(dc) === 0d, 0d).otherwise(skewness(dc)),
+        when(var_pop(dc) === 0d, 0d).otherwise(kurtosis(dc) + lit(3d))).head()
+    }
+    // exact: same bits, or both null
+    def exact(a: Any, b: Any) = (a, b) match {
+      case (null, null) => true
+      case (x: Double, y: Double) => java.lang.Double.compare(x, y) == 0
+      case (x, y) => x == y
+    }
+    val metrics = graft.queries.ProfileQueries.numericMetrics
+    got.foreach { r =>
+      val want = builtIn(r.getString(0))
+      metrics.zipWithIndex.foreach { case (m, i) =>
+        val (g, w) = (r.get(i + 1), want.get(i))
+        val ok = exact(g, w) || (m == "skew_pop" && ((g, w) match {
+          // Spark divides by sqrt(m2³), the kernel by pow(m2, 1.5)
+          case (x: Double, y: Double) => math.abs(x - y) <= math.ulp(y)
+          case _ => false
+        }))
+        assert(ok, s"${r.getString(0)}.$m: $g vs built-in $w")
+      }
+    }
+    val byName = got.map(r => r.getString(0) -> r).toMap
+    assert(byName("all_null").isNullAt(metrics.indexOf("var_pop") + 1))
+    assert(byName("one_value").isNullAt(metrics.indexOf("var_samp") + 1))
+    assert(byName("one_value").getDouble(metrics.indexOf("kurt_pop") + 1) == 0.0)
+  }
 }

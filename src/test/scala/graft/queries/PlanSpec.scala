@@ -41,6 +41,31 @@ class PlanSpec extends SparkSpec {
     assert(scans == 1, s"expected 1 scan:\n$p")
   }
 
+  test("q02/q03/q30/q33: moments come from the library kernel, no built-in moment aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate._
+    // q30 streams its projection; only a started stream optimizes a
+    // streaming plan, so the same projection is planned over the batch
+    // table (the watermark drops out, the aggregates stay)
+    val frames = Seq("q02_profile_numeric", "q03_profile_orders", "q33_scott_histogram")
+      .map(q => q -> SparkEntry.queries(q)(spark, sfDir)) :+
+      ("q30_events_stream" ->
+        PipelineQueries.eventsWindowProfile(QueryUtil.eventsEventTs(spark, sfDir)))
+    frames.foreach { case (q, df) =>
+      val p = df.queryExecution.optimizedPlan
+      val fns = p.flatMap(_.expressions.flatMap(_.collect {
+        case a: AggregateExpression => a.aggregateFunction
+      }))
+      val builtIn = fns.filter {
+        case _: VariancePop | _: VarianceSamp | _: StddevPop | _: Skewness | _: Kurtosis => true
+        case _ => false
+      }
+      assert(builtIn.isEmpty, s"$q plans built-in moments ${builtIn.mkString(", ")}:\n$p")
+      if (q != "q33_scott_histogram")
+        assert(fns.exists(_.isInstanceOf[graft.profile.MomentsAgg]) &&
+          p.toString.contains("moments("), s"$q plans no moments kernel:\n$p")
+    }
+  }
+
   test("q13: knn corpus is scanned once and queries broadcast") {
     val p = plan("q13_knn_cosine")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p)

@@ -61,13 +61,13 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("windowedStats append mode with watermark emits finalized windows") {
+  test("windowedMoments append mode with watermark emits finalized windows") {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
 
     val input = MemoryStream[(Timestamp, String, Double)]
-    val agg = StreamingProfile.windowedStats(
+    val agg = StreamingProfile.windowedMoments(
       input.toDF().toDF("ts", "key", "value"),
       "ts", "key", "value", "10 minutes", "1 minutes")
     val q = agg.writeStream.format("memory")
@@ -81,7 +81,7 @@ class StreamingSpec extends SparkSpec {
       input.addData((Timestamp.valueOf("2024-01-01 12:00:00"), "a", 1.0))
       q.processAllAvailable()
       val rows = spark.table("stream_append_test").collect()
-      assert(rows.exists(r => r.getAs[Long]("n_events") == 2L),
+      assert(rows.exists(r => r.getAs[Long]("n") == 2L),
         "first window should have been finalized with both events")
     } finally q.stop()
   }
