@@ -3122,12 +3122,19 @@ object ScaleQueries {
     import spark.implicits._
     val keyed = table(spark, dir, "events").select(mgKey.as("hkey"))
     val cands = MisraGries.candidates(keyed, "hkey", MgK)
+    heavyHitterGate(keyed, cands.toSeq.toDF("hkey", "mg_count"))
+  }
+
+  /** q115/q118's gate tail: the TRUE heavy hitters of `keyed.hkey`
+    * (exact count > N/[[MgK]]) left-joined to the summary's
+    * `(hkey, mg_count)` candidates, with the ⊇ guarantee and the
+    * count error band pinned as booleans. */
+  private def heavyHitterGate(keyed: DataFrame, cands: DataFrame): DataFrame = {
     val n = keyed.count()
     val thr = n / MgK
-    val candDf = cands.toSeq.toDF("hkey", "mg_count")
     keyed.groupBy("hkey").agg(count(lit(1)).as("n_events"))
       .filter(col("n_events") > thr)
-      .join(broadcast(candDf), Seq("hkey"), "left")
+      .join(broadcast(cands), Seq("hkey"), "left")
       .select(col("hkey"), col("n_events"),
         lit(n).as("n_total"), lit(thr).as("threshold"),
         col("mg_count").isNotNull.as("in_candidates"),
@@ -3152,12 +3159,13 @@ object ScaleQueries {
   // ---- q118: streaming heavy hitters ---------------------------------
 
   /** q115's Misra-Gries summary computed as STRUCTURED-STREAMING state:
-    * the custom Aggregator rides a global streaming aggregate (complete
-    * mode, AvailableNow), so per-stream state is the ≤[[MgK]]-counter
-    * summary itself — never the per-key count table a naive streaming
-    * groupBy would hold, which is the whole point when keys are
-    * unbounded (the q97 "state = the report" pattern, with a custom
-    * mergeable sketch instead of built-in sums). The gate is q115's:
+    * the Space-Saving aggregate behind [[graft.operators.MisraGries]]
+    * rides a global streaming aggregate (complete mode, AvailableNow),
+    * so per-stream state is the ≤[[MgK]]-counter summary itself —
+    * never the per-key count table a naive streaming groupBy would
+    * hold, which is the whole point when keys are unbounded (the q97
+    * "state = the report" pattern, with a custom mergeable sketch
+    * instead of built-in sums). The gate is q115's:
     * the sketch's deterministic guarantees pinned against batch exact
     * counts, so the stream and batch paths must agree exactly. */
   def streamHeavyHitters(spark: SparkSession, dir: String): DataFrame =
@@ -3166,12 +3174,9 @@ object ScaleQueries {
       val schema = spark.read.parquet(s"$dir/events.parquet").schema
       val src = spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
-        .select(mgKey.as("hkey"))
-        .as(org.apache.spark.sql.Encoders.STRING)
-      val agg = new MisraGries.MGEntriesAggregator(MgK)
       try spark.catalog.dropTempView("stream_mg_result")
       catch { case _: Throwable => () }
-      val q = src.select(agg.toColumn.name("cands"))
+      val q = src.select(MisraGries.entries(mgKey, MgK).as("cands"))
         .writeStream.format("memory").queryName("stream_mg_result")
         .outputMode("complete")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -3180,20 +3185,8 @@ object ScaleQueries {
       val cands = spark.table("stream_mg_result")
         .select(explode(col("cands")).as("e"))
         .select(col("e.hkey").as("hkey"), col("e.mg_count").as("mg_count"))
-      val keyed = table(spark, dir, "events").select(mgKey.as("hkey"))
-      val n = keyed.count()
-      val thr = n / MgK
-      keyed.groupBy("hkey").agg(count(lit(1)).as("n_events"))
-        .filter(col("n_events") > thr)
-        .join(broadcast(cands), Seq("hkey"), "left")
-        .select(col("hkey"), col("n_events"),
-          lit(n).as("n_total"), lit(thr).as("threshold"),
-          col("mg_count").isNotNull.as("in_candidates"),
-          (col("mg_count").isNotNull &&
-            col("mg_count") >= col("n_events") - thr &&
-            col("mg_count") <= col("n_events")).as("mg_within_bound"))
-        .drop("mg_count")
-        .orderBy("hkey")
+      heavyHitterGate(
+        table(spark, dir, "events").select(mgKey.as("hkey")), cands)
     }
 
   /** Identical oracle to q115 — stream state must reproduce the same

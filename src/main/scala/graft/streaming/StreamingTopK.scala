@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.TopKAggregate
+import graft.operators.TopKAggregate.Counters
 
 /** Streaming top-K frequent values with BOUNDED state — the streaming
   * form of the profiler's top-K surface (reference: batch global sort +
@@ -10,11 +12,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * make exact streaming top-K impossible in finite memory, so this uses
   * the Space-Saving sketch of Metwally/Agrawal/El Abbadi, ICDT'05).
   *
-  * State per group key: at most `capacity` (value → (count, error))
-  * entries. On overflow the minimum-count entry is evicted and its
-  * count becomes the newcomer's error bound. Guarantees: any value
-  * with true frequency > N/capacity is present; reported count is
-  * within [true, true + error].
+  * State per group key: the [[graft.operators.TopKAggregate]] sketch,
+  * at most `capacity` (value → (count, error)) entries, advanced by its
+  * update step and ranked by its finish — the same code as the batch
+  * `Aggregator`. Guarantees: any value with true frequency >
+  * N/capacity is present; reported count is within [true, true +
+  * error]. Null values are not counted.
   *
   * Scale shape: micro-batch rows pre-aggregate to (key, value, cnt)
   * BEFORE the stateful shuffle — a per-partition hash combine
@@ -24,20 +27,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * hash-partitioned by group key across executors.
   */
 object StreamingTopK {
-
-  type Counters = Map[String, (Long, Long)] // value -> (count, error)
-
-  /** One update step of the Space-Saving sketch. */
-  def updateSketch(
-      sketch: Counters, value: String, cnt: Long, capacity: Int): Counters =
-    sketch.get(value) match {
-      case Some((c, e)) => sketch.updated(value, (c + cnt, e))
-      case None if sketch.size < capacity => sketch.updated(value, (cnt, 0L))
-      case None =>
-        // evict the minimum; inherit its count as error bound
-        val (minV, (minC, _)) = sketch.minBy { case (v, (c, _)) => (c, v) }
-        (sketch - minV).updated(value, (minC + cnt, minC))
-    }
 
   /** Top-k rows per key from a streaming (key, value) frame.
     * Output (update mode): key, value, cnt, err, rank. */
@@ -54,6 +43,7 @@ object StreamingTopK {
     val ds = events
       .select(col(keyCol).cast("string").as("k"),
         col(valueCol).cast("string").as("v"))
+      .filter(col("v").isNotNull)
       .as[(String, String)]
       .mapPartitions { it =>
         val m = scala.collection.mutable.HashMap.empty[(String, String), Long]
@@ -73,14 +63,11 @@ object StreamingTopK {
           }
           val sk0 = state.getOption.getOrElse(Map.empty: Counters)
           val sk = batchCounts.foldLeft(sk0) { case (s, (v, c)) =>
-            updateSketch(s, v, c, capacity)
+            TopKAggregate.updateSketch(s, v, c, capacity)
           }
           state.update(sk)
-          sk.toSeq
-            .sortBy { case (v, (c, _)) => (-c, v) }
-            .take(k).zipWithIndex
-            .map { case ((v, (c, e)), i) => TopKRow(key, v, c, e, i + 1) }
-            .iterator
+          TopKAggregate.finishSketch(sk, k).iterator
+            .map(e => TopKRow(key, e.value, e.cnt, e.err, e.rank))
       }
   }
 }

@@ -42,7 +42,7 @@ class TopKAggregateSpec extends SparkSpec {
     // partition the stream, sketch each partition, merge
     val parts = xs.grouped(617).toSeq
     val sketches = parts.map(p => p.foldLeft(Map.empty: TopKAggregate.Counters) {
-      (s, v) => graft.streaming.StreamingTopK.updateSketch(s, v, 1L, capacity)
+      (s, v) => TopKAggregate.updateSketch(s, v, 1L, capacity)
     })
     val merged = sketches.reduce(TopKAggregate.mergeSketches(_, _, capacity))
     assert(merged.size <= capacity)
@@ -64,7 +64,7 @@ class TopKAggregateSpec extends SparkSpec {
     val truth = trueCounts(xs)
     val parts = xs.grouped(173).toSeq
     val sketches = parts.map(p => p.foldLeft(Map.empty: TopKAggregate.Counters) {
-      (s, v) => graft.streaming.StreamingTopK.updateSketch(s, v, 1L, capacity)
+      (s, v) => TopKAggregate.updateSketch(s, v, 1L, capacity)
     })
     for (order <- Seq(sketches, sketches.reverse, rnd.shuffle(sketches))) {
       val m = order.reduce(TopKAggregate.mergeSketches(_, _, capacity))

@@ -7,15 +7,15 @@ class StreamingTopKSpec extends SparkSpec {
 
   test("space-saving sketch: exact within capacity, bounded error beyond") {
     // within capacity: exact counts
-    var sk: StreamingTopK.Counters = Map.empty
+    var sk: graft.operators.TopKAggregate.Counters = Map.empty
     Seq("a", "b", "a", "c", "a", "b").foreach { v =>
-      sk = StreamingTopK.updateSketch(sk, v, 1L, capacity = 8)
+      sk = graft.operators.TopKAggregate.updateSketch(sk, v, 1L, capacity = 8)
     }
     assert(sk("a") == (3L, 0L) && sk("b") == (2L, 0L) && sk("c") == (1L, 0L))
     // overflow: heavy hitter survives, error bounds recorded
-    var s2: StreamingTopK.Counters = Map.empty
+    var s2: graft.operators.TopKAggregate.Counters = Map.empty
     val stream = Seq.fill(50)("hot") ++ (1 to 30).map(i => s"cold$i")
-    stream.foreach(v => s2 = StreamingTopK.updateSketch(s2, v, 1L, capacity = 4))
+    stream.foreach(v => s2 = graft.operators.TopKAggregate.updateSketch(s2, v, 1L, capacity = 4))
     assert(s2.size <= 4)
     val (hotC, hotE) = s2("hot")
     assert(hotC >= 50L && hotC - hotE <= 50L)
