@@ -1,40 +1,93 @@
 package graft.profile
 
-import org.apache.spark.sql.DataFrame
+import java.util.UUID
+import java.util.concurrent.TimeUnit
+import java.util.concurrent.atomic.AtomicReference
+
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graft.SqlShims
 import org.apache.spark.sql.types.{StringType, StructField}
 
 /** Facade reproducing the reference's whole job
-  * (jar/ProfileJob.java:78-162) Spark-first:
+  * (jar/ProfileJob.java:78-162) Spark-first, as two independent queries
+  * run at the same time:
   *
-  *   job 1 — [[NumericProfiler.profile]]: every column's basic stats +
-  *           lengths + census + completeness, one scan, zero shuffles.
-  *   job 2 — [[TopK.topKAll]]: all string columns' top-K values AND
-  *           patterns, one scan, one aggregation, collected once.
+  *   numeric — [[NumericProfiler.profile]] on the caller's thread: every
+  *             column's basic stats + lengths + census + completeness,
+  *             one scan, zero shuffles.
+  *   top-K   — [[TopK.topKAll]] on a pooled daemon thread, when the
+  *             table has string columns: their top-K values AND
+  *             patterns, one scan, one aggregation, collected once.
   *
-  * vs the reference's 1 + #columns source passes and per-column
-  * parallelism-1 sort stages. Histogram bin width (Scott's rule with the
-  * reference's skew correction, jar/ProfileJob.java:146-162) is derived
-  * driver-side per numeric column.
+  * Neither reads the other's output (as the reference's basic-stats and
+  * top-K passes are independent jobs of one dataflow), so each one's
+  * planning, code generation and jobs overlap the other's. The pooled
+  * thread carries the caller's SparkContext local properties (job group,
+  * tags, scheduler pool). Every job of a profile carries the request's
+  * tag (`graft-profile-<uuid>`), one layer tag ([[NumericTag]] or
+  * [[TopKTag]]) and a description naming the layer. When one query
+  * fails, the request's other jobs are cancelled and waited for, then
+  * the first error is thrown as is.
+  *
+  * Columns are profiled by position, as the reference addresses them,
+  * so repeated names profile; each [[ColumnProfile]] keeps its input
+  * name. Histogram bin width (Scott's rule with the reference's skew
+  * correction, jar/ProfileJob.java:146-162) is derived driver-side per
+  * numeric column.
   */
 object ProfileRunner {
 
+  val NumericTag = "graft-profile-numeric"
+  val TopKTag = "graft-profile-topk"
+
+  private lazy val pool = SqlShims.daemonCachedPool("graft-profile")
+
   def profile(df: DataFrame, topK: Int = 20): TableProfile = {
-    val base = NumericProfiler.profile(df)
-    val strCols = df.schema.fields.collect { case StructField(n, _: StringType, _, _) => n }.toSeq
-    if (strCols.isEmpty) base
-    else {
-      val tops = TopK.topKAll(df, strCols, topK).collect()
-        .groupBy(r => (r.getAs[String]("kind"), r.getAs[String]("col_name")))
-        .view.mapValues(_.sortBy(_.getAs[Int]("rank"))
-          .map(r => (r.getAs[String]("key"), r.getAs[Long]("cnt"))).toSeq)
-        .toMap
-      def top(kind: String, c: String) = tops.getOrElse((kind, c), Nil)
-      base.copy(columns = base.columns.map { cp =>
-        cp.copy(
-          topValues = top(TopK.Value, cp.name),
-          topPatterns = top(TopK.Pattern, cp.name))
-      })
+    val fields = df.schema.fields
+    val names = fields.indices.map(i => s"c$i")
+    val byPosition = df.toDF(names: _*)
+    val strCols = names.zip(fields).collect { case (n, StructField(_, _: StringType, _, _)) => n }
+    val sc = df.sparkSession.sparkContext
+    val request = s"graft-profile-${UUID.randomUUID()}"
+    val failure = new AtomicReference[Throwable]
+    def tagged[T](layer: String)(body: => T): T = {
+      val description = sc.getLocalProperty("spark.job.description")
+      sc.addJobTags(Set(request, layer))
+      sc.setJobDescription(s"ProfileRunner.profile $layer")
+      try body
+      catch { case e: Throwable =>
+        failure.compareAndSet(null, e)
+        sc.cancelJobsWithTag(request, s"$layer query of the same profile failed")
+        throw e
+      } finally {
+        sc.removeJobTags(Set(request, layer))
+        sc.setJobDescription(description)
+      }
     }
+    val tops = Option.when(strCols.nonEmpty)(
+      SqlShims.withThreadLocalCaptured(df.sparkSession, pool)(
+        tagged(TopKTag)(TopK.topKAll(byPosition, strCols, topK).collect())))
+    val base = Try(tagged(NumericTag)(NumericProfiler.profile(byPosition)))
+    // the top-K query may still be planning when the numeric one fails
+    tops.foreach(f => while (base.isFailure && !f.isDone) {
+      sc.cancelJobsWithTag(request, s"$NumericTag query of the same profile failed")
+      Try(f.get(10, TimeUnit.MILLISECONDS))
+    })
+    Option(failure.get).foreach(e => throw e)
+
+    val top = tops.fold(Array.empty[Row])(_.join())
+      .groupBy(r => (r.getAs[String]("kind"), r.getAs[String]("col_name")))
+      .view.mapValues(_.sortBy(_.getAs[Int]("rank"))
+        .map(r => (r.getAs[String]("key"), r.getAs[Long]("cnt"))).toSeq)
+      .toMap.withDefaultValue(Nil)
+    base.get.copy(columns = base.get.columns.zipWithIndex.map { case (cp, i) =>
+      cp.copy(
+        name = fields(i).name,
+        topValues = top((TopK.Value, names(i))),
+        topPatterns = top((TopK.Pattern, names(i))))
+    })
   }
 
   def report(df: DataFrame, topK: Int = 20): String = {

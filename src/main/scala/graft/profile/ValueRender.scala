@@ -7,7 +7,8 @@ import java.math.{BigDecimal, MathContext}
   * org/apache/flink/stats/StatsPojo.java:403-433). The quirks are
   * deliberate parity: 0 renders as "0E0", NaN renders as "", trailing
   * zeros stripped in scientific notation, BigDecimal leading "0." loses
-  * its zero.
+  * its zero. Deviation: ±Infinity renders as Java's "Infinity" /
+  * "-Infinity", where the reference's render throws.
   */
 object ValueRender {
 
@@ -22,6 +23,7 @@ object ValueRender {
   /** reference: CastUtils.java:22-32 (DECIMAL32 context) */
   def floatAsStr(f: Float): String = {
     if (f.isNaN) ""
+    else if (f.isInfinite) f.toString
     else if (f == 0f) "0E0"
     else {
       val bd = new BigDecimal(f.toDouble, MathContext.DECIMAL32).stripTrailingZeros()
@@ -32,6 +34,7 @@ object ValueRender {
   /** reference: CastUtils.java:34-45 (DECIMAL64 context) */
   def doubleAsStr(d: Double): String = {
     if (d.isNaN) ""
+    else if (d.isInfinite) d.toString
     else if (d == 0d) "0E0"
     else {
       val bd = new BigDecimal(d, MathContext.DECIMAL64).stripTrailingZeros()

@@ -15,21 +15,25 @@ import graft.SparkSpec
 import graft.functions.PatternMask
 import graft.streaming.StreamingProfile
 
-/** Whole-table profiler vs hand-checkable data + reference-parity
-  * fixture (the demo generator from jar/ProfileJob.java:44-65). */
-class ProfileSpec extends SparkSpec {
+object ProfileSpec {
 
   /** The reference's demo generator, reproduced exactly:
     * every 3rd row (true,"3",1); else every 7th (true,"7",1); else every
     * 11th (null,"ABCDEF00X30A333Y",i); else (true, ""+i, i). i in 1..n.
     * (i%3 wins ties — see SURVEY.md §5.1.) */
-  private def referenceRows(n: Int): Seq[(java.lang.Boolean, String, Integer)] =
+  def referenceRows(n: Int): Seq[(java.lang.Boolean, String, Integer)] =
     (1 to n).map { i =>
       if (i % 3 == 0) (java.lang.Boolean.TRUE, "3", Integer.valueOf(1))
       else if (i % 7 == 0) (java.lang.Boolean.TRUE, "7", Integer.valueOf(1))
       else if (i % 11 == 0) (null: java.lang.Boolean, "ABCDEF00X30A333Y", Integer.valueOf(i))
       else (java.lang.Boolean.TRUE, "" + i, Integer.valueOf(i))
     }
+}
+
+/** Whole-table profiler vs hand-checkable data + reference-parity
+  * fixture (the demo generator from jar/ProfileJob.java:44-65). */
+class ProfileSpec extends SparkSpec {
+  import ProfileSpec.referenceRows
 
   test("reference demo fixture: profile matches directly-computed stats") {
     val s = spark
