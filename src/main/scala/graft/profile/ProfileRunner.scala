@@ -70,9 +70,11 @@ object ProfileRunner {
       SqlShims.withThreadLocalCaptured(df.sparkSession, pool)(
         tagged(TopKTag)(TopK.topKAll(byPosition, strCols, topK).collect())))
     val base = Try(tagged(NumericTag)(NumericProfiler.profile(byPosition)))
-    // the top-K query may still be planning when the numeric one fails
-    tops.foreach(f => while (base.isFailure && !f.isDone) {
-      sc.cancelJobsWithTag(request, s"$NumericTag query of the same profile failed")
+    // wait for the top-K query whatever the numeric one did: it may fail
+    // after the numeric one succeeded, or still be planning when the
+    // numeric one failed
+    tops.foreach(f => while (!f.isDone) {
+      if (base.isFailure) sc.cancelJobsWithTag(request, s"$NumericTag query of the same profile failed")
       Try(f.get(10, TimeUnit.MILLISECONDS))
     })
     Option(failure.get).foreach(e => throw e)

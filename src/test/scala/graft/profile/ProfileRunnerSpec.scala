@@ -1,11 +1,11 @@
 package graft.profile
 
-import java.util.concurrent.{CompletionException, ConcurrentLinkedQueue, ExecutionException}
+import java.util.concurrent.{CompletionException, ConcurrentLinkedQueue, CountDownLatch, ExecutionException, TimeUnit}
 
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.SparkException
+import org.apache.spark.{SparkException, TaskContext}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -144,6 +144,42 @@ class ProfileRunnerSpec extends SparkSpec {
     assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
   }
 
+  test("a top-K query failing after the numeric query succeeded throws its own error") {
+    // the string column's UDF throws only inside top-K tasks, and only once
+    // the numeric query's job has ended, so the numeric query succeeds first
+    val sc = spark.sparkContext
+    ProfileRunnerSpec.numericEnded = new CountDownLatch(1)
+    val numericJobs = TrieMap.empty[Int, Unit]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(ProfileRunner.NumericTag))) numericJobs(e.jobId) = ()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (numericJobs.contains(e.jobId)) ProfileRunnerSpec.numericEnded.countDown()
+    }
+    val failInTopK = udf { (i: Long) =>
+      val tags = Option(TaskContext.get.getLocalProperty("spark.job.tags")).getOrElse("")
+      if (tags.split(",").contains(ProfileRunner.TopKTag)) {
+        ProfileRunnerSpec.numericEnded.await(60, TimeUnit.SECONDS)
+        throw new IllegalStateException("top-K query failed")
+      }
+      i.toString
+    }
+    val df = spark.range(0, 10, 1, 1).select(failInTopK(col("id")).as("s"), col("id").as("n"))
+    sc.addSparkListener(listener)
+    val (out, jobs, ended) =
+      try withJobs(ProfileRunner.profile(df)) finally sc.removeSparkListener(listener)
+    val e = out.left.getOrElse(fail("the profile did not fail"))
+    assert(e.isInstanceOf[SparkException], e)
+    assert(!e.isInstanceOf[ExecutionException] && !e.isInstanceOf[CompletionException], e)
+    assert(e.getMessage.contains("top-K query failed"), e)
+    val numeric = jobs.filter(_.layer == Set(ProfileRunner.NumericTag))
+    assert(numeric.nonEmpty && numeric.forall(j => ended.get(j.id).contains(JobSucceeded)),
+      s"$numeric ended ${numeric.map(j => ended.get(j.id))}")
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
+    assert(sc.getJobTags().isEmpty, sc.getJobTags())
+  }
+
   test("±Infinity in double and float columns profiles and renders as Infinity") {
     val s = spark
     import s.implicits._
@@ -176,4 +212,10 @@ class ProfileRunnerSpec extends SparkSpec {
     assert(a1 == ProfileRunner.profile(Seq("y", "z", null).toDF("a")).columns.head)
     assert("Column 'a' \\(string\\)".r.findAllIn(ProfileRunner.report(df)).size == 2)
   }
+}
+
+object ProfileRunnerSpec {
+  /** Opened when the numeric query's job of the top-K failure test ends;
+    * a static field, as the task closure reaches it without serializing it. */
+  @volatile var numericEnded = new CountDownLatch(0)
 }
