@@ -71,7 +71,8 @@ object NumericProfiler {
 
   /** Whole-row completeness predicate: every field non-null and its
     * string rendering non-blank (reference:
-    * RowStatsCollectHelper.java:31-38). */
+    * RowStatsCollectHelper.java:31-38). A row of no columns is complete;
+    * the optimizer drops the leading `true`. */
   def completePredicate(schema: StructType): Column =
     schema.fields.map { f =>
       val c = column(f.name)
@@ -79,7 +80,7 @@ object NumericProfiler {
         case _: StringType => c.isNotNull && trim(c) =!= ""
         case _ => c.isNotNull
       }
-    }.reduce(_ && _)
+    }.foldLeft(lit(true))(_ && _)
 
   /** The aggregate columns that apply to one field, stable `c{i}_`
     * prefixes. */

@@ -1128,8 +1128,9 @@ object GraphQueries {
     // Child session with few shuffle partitions: the contraction runs
     // ~log₂(block) rounds of tiny stages over a |V|-row edge list, so
     // wall-clock is STAGE COUNT × task overhead, not data — partition
-    // count sizes to edge volume exactly like streaming state sizes to
-    // state volume (QueryUtil.StreamStatePartitions); a 10⁸-edge
+    // count sizes to edge volume, as streaming state partitions stay
+    // few whatever the slot count (QueryUtil.streamStatePartitions:
+    // each state store pays a fixed commit per batch); a 10⁸-edge
     // deployment sizes it up.
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "2")

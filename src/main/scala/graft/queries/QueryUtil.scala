@@ -145,18 +145,32 @@ object QueryUtil {
     ev.withColumn("event_ts", eventTs(ev))
   }
 
-  /** Streaming state partitions for the gated streaming queries.
+  /** Upper bound on the state partitions of a stream session (see
+    * [[streamStatePartitions]]).
     *
     * Stateful operators allocate `spark.sql.shuffle.partitions` state
     * stores per operator (a stream-stream join spins FOUR per
     * partition), and every micro-batch pays store open/commit/snapshot
     * per partition — a fixed cost independent of data volume. State
-    * partitioning is therefore sized to STATE VOLUME, not CPU count:
-    * the bench corpus carries KB-scale state, where 8 partitions cuts
-    * the q46 join from ~8 s to ~2.6 s warm; a 100 TB deployment sizes
-    * this up (it is pinned per-query into the checkpoint on first
-    * start, exactly like a production job picks it at deploy time). */
+    * partitioning is therefore capped by STATE VOLUME, not raised with
+    * CPU count: the bench corpus carries KB-scale state, where 8
+    * partitions cuts the q46 join from ~8 s to ~2.6 s warm; a 100 TB
+    * deployment sizes this up (it is pinned per-query into the
+    * checkpoint on first start, exactly like a production job picks it
+    * at deploy time). */
   val StreamStatePartitions = 8
+
+  /** State partitions of every stream session of `spark`:
+    * `min(`[[StreamStatePartitions]]`, defaultParallelism)`, so one
+    * trigger's state stage runs in at most one wave of tasks. Each store
+    * commits four files per batch (delta, checksum and a `.crc` of each;
+    * on the local file system that forks ~20 `chmod`/`readlink`
+    * processes per store), so a store costs the same whether it holds
+    * one row or a hundred, and more stores than task slots add a wave to
+    * every trigger. Spark pins the count into a checkpoint's offset log:
+    * a checkpoint resumes at the count it was written with. */
+  def streamStatePartitions(spark: SparkSession): Int =
+    math.min(StreamStatePartitions, spark.sparkContext.defaultParallelism)
 
   /** One POOLED streaming child session per parent session, lazily
     * created (see [[withStreamStatePartitions]]). Pooling — instead of
@@ -172,7 +186,7 @@ object QueryUtil {
   /** Run `body` (typically: build + start + await a streaming query)
     * against an ISOLATED child session (`newSession`: own SQLConf and
     * temp views, shared SparkContext/state) whose
-    * `spark.sql.shuffle.partitions` = [[StreamStatePartitions]]. The
+    * `spark.sql.shuffle.partitions` = [[streamStatePartitions]]. The
     * conf is read at query START and recorded in the checkpoint, so it
     * must span planning; results never depend on it. A child session —
     * not set/restore on the shared session — because two overlapping
@@ -185,7 +199,7 @@ object QueryUtil {
   def withStreamStatePartitions[T](spark: SparkSession)(body: SparkSession => T): T = {
     val s = streamSessionPool.computeIfAbsent(spark, { p =>
       val c = p.newSession()
-      c.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
+      c.conf.set("spark.sql.shuffle.partitions", streamStatePartitions(p).toString)
       c
     })
     body(s)

@@ -4065,7 +4065,7 @@ object ScaleQueries {
     twsSessionPool.computeIfAbsent((spark, gate), { _ =>
       val c = spark.newSession()
       c.conf.set("spark.sql.shuffle.partitions",
-        QueryUtil.StreamStatePartitions.toString)
+        QueryUtil.streamStatePartitions(spark).toString)
       c.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state." +
           "RocksDBStateStoreProvider")

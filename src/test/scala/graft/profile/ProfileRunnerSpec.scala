@@ -16,8 +16,8 @@ import graft.SparkSpec
 /** [[ProfileRunner.profile]] runs its numeric and top-K queries at the
   * same time: the result equals running them one after the other, every
   * job is tagged with its request and layer, and one query's failure
-  * cancels the other. Also the inputs that must profile: ±Infinity and
-  * repeated column names. */
+  * cancels the other. Also the inputs that must profile: ±Infinity,
+  * repeated column names and tables with no columns. */
 class ProfileRunnerSpec extends SparkSpec {
 
   /** The two queries one after the other on the caller's thread, stitched
@@ -211,6 +211,15 @@ class ProfileRunnerSpec extends SparkSpec {
     assert(a0 == ProfileRunner.profile(Seq("x", "x", "x").toDF("a")).columns.head)
     assert(a1 == ProfileRunner.profile(Seq("y", "z", null).toDF("a")).columns.head)
     assert("Column 'a' \\(string\\)".r.findAllIn(ProfileRunner.report(df)).size == 2)
+  }
+
+  test("a table with no columns profiles: its rows count and are complete") {
+    for ((df, rows) <- Seq(spark.range(3).select() -> 3L, spark.emptyDataFrame -> 0L)) {
+      val tp = ProfileRunner.profile(df)
+      assert((tp.rowCount, tp.completeRecords, tp.columns.isEmpty) == (rows, rows, true), tp)
+      val report = ProfileRunner.report(df)
+      assert(report.startsWith(s"Rows: $rows\nComplete records: $rows\n"), report)
+    }
   }
 }
 
