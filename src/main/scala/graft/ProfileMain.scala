@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import graft.queries.QueryUtil
 
 /** CLI twin of the reference's entry point (jar/ProfileJob.java:78-162,
   * `ProfileJob.main`) — profile a table and print the full report, so
@@ -21,51 +21,39 @@ import org.apache.spark.sql.streaming.Trigger
   * the report format matches StatsPojo.toString (print bug #1 fixed,
   * documented).
   *
-  * `--stream` runs the same profile algebra UNBOUNDED: `readStream`
-  * over a parquet directory into
+  * `--stream` runs the same profile algebra UNBOUNDED:
+  * [[QueryUtil.streamParquet]] replays `<dir>` (a parquet directory, or
+  * one parquet file among others) into
   * [[graft.streaming.StreamingProfile.windowedMoments]] (the Pébay
   * moments kernel as incremental streaming state, watermark bounding
-  * it), drained with an AvailableNow trigger so the CLI
-  * terminates after cataloging what has arrived — pointed at a growing
-  * directory with a continuous trigger the identical plan runs forever.
+  * it), and [[QueryUtil.drain]] runs it with an AvailableNow trigger,
+  * so the CLI terminates after cataloging what has arrived — pointed at
+  * a growing directory with a continuous trigger the identical plan
+  * runs forever. It is the replay path of every gated streaming query.
   * The event-time column dispatches on its physical type exactly like
   * the query surface (epoch-nanos long / TIMESTAMP / TIMESTAMP_NTZ via
-  * [[graft.queries.QueryUtil.eventTs]]).
+  * [[QueryUtil.eventTs]]).
   */
 object ProfileMain {
 
   /** The `--stream` pipeline, as a testable value: windowed per-key
-    * moments of `dir`'s parquet, computed INCREMENTALLY via a real
-    * streaming query (memory sink, AvailableNow), returned as the
-    * final result table. Equal, row for row, to the batch
-    * windowedMoments of the same data — the merge algebra is what the
-    * spec pins. */
+    * moments of the parquet at `dir` (a directory or a file), computed
+    * INCREMENTALLY by a real streaming query ([[QueryUtil.drain]]:
+    * memory sink, AvailableNow, fail-loud on timeout), returned as the
+    * final result table ordered by window and key. Equal, row for row,
+    * to the batch windowedMoments of the same data — the merge algebra
+    * is what the spec pins. */
   def streamProfile(
       spark0: SparkSession, dir: String, tsCol: String, keyCol: String,
       valueCol: String, windowLen: String = "1 hour",
       watermark: String = "10 minutes"): DataFrame =
-    graft.queries.QueryUtil.withStreamStatePartitions(spark0) { spark =>
-      val schema = spark.read.parquet(dir).schema
-      // file streaming sources require a DIRECTORY; a single-file path
-      // (the common "profile this table" invocation against a dir of
-      // many tables) becomes parent + glob, like the query surface
-      val f = new java.io.File(dir)
-      val reader = spark.readStream.schema(schema)
-      val src0 =
-        if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
-        else reader.parquet(dir)
-      val src = src0.withColumn("__event_ts",
-        graft.queries.QueryUtil.eventTs(schema, tsCol))
-      val sink = s"profile_stream_result"
-      try spark.catalog.dropTempView(sink) catch { case _: Throwable => () }
-      val q = graft.streaming.StreamingProfile.windowedMoments(
-          src, "__event_ts", keyCol, valueCol, windowLen, watermark)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      graft.queries.QueryUtil.awaitOrFail(q)
-      spark.table(sink).orderBy(col("window_start"), col(keyCol))
+    QueryUtil.withStreamStatePartitions(spark0) { spark =>
+      val src = QueryUtil.streamParquet(spark, dir)
+      val moments = graft.streaming.StreamingProfile.windowedMoments(
+        src.withColumn("__event_ts", QueryUtil.eventTs(src, tsCol)),
+        "__event_ts", keyCol, valueCol, windowLen, watermark)
+      QueryUtil.drain(moments, "profile_stream_result", "complete")
+        .orderBy(col("window_start"), col(keyCol))
     }
 
   def main(args: Array[String]): Unit = {

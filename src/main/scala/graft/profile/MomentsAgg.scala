@@ -7,14 +7,16 @@ import org.apache.spark.sql.functions.{lit, pow, sqrt, when}
 import org.apache.spark.sql.graft.SqlShims
 import org.apache.spark.sql.types.{DataType, LongType}
 
-/** The moments kernel: the raw central moments `(n, mean, m2, m3, m4)`
-  * of a double column in one fixed-width buffer — Catalyst's
-  * `CentralMomentAgg` (the Pébay update and merge of [[Moments]],
-  * reference: StatsPojo.java:101-155) at order 4. Nulls are skipped; a
-  * NaN propagates into every moment. [[NumericProfiler]] and
-  * [[graft.streaming.StreamingProfile.windowedMoments]] both run it
-  * beside `count`, `avg`, `min` and `max`, taking the mean from `avg()`
-  * (the rendered reports are pinned to it); [[MomentsAgg.derived]] is
+/** The moments kernel: the count and raw central moments
+  * `(n, m2, m3, m4)` of a double column in one fixed-width buffer —
+  * Catalyst's `CentralMomentAgg` (the Pébay update and merge of
+  * [[Moments]], reference: StatsPojo.java:101-155) at order 4. Nulls
+  * are skipped and a NaN counts, as in `count`; a NaN propagates into
+  * every moment. [[NumericProfiler]] takes its numeric-value count from
+  * `n`. It and [[graft.streaming.StreamingProfile.windowedMoments]] run
+  * the kernel beside `avg`, `min` and `max` and take the mean from
+  * `avg()` (the rendered reports are pinned to it), so the buffer's
+  * running mean is not part of the result. [[MomentsAgg.derived]] is
   * the column form of the statistics [[DerivedStats]] derives from it.
   */
 case class MomentsAgg(child: Expression)
@@ -25,8 +27,7 @@ case class MomentsAgg(child: Expression)
   override def nullable: Boolean = false
 
   override val evaluateExpression: Expression = CreateNamedStruct(Seq(
-    Literal("n"), Cast(n, LongType), Literal("mean"), avg,
-    Literal("m2"), m2, Literal("m3"), m3, Literal("m4"), m4))
+    Literal("n"), Cast(n, LongType), Literal("m2"), m2, Literal("m3"), m3, Literal("m4"), m4))
 
   override def dataType: DataType = evaluateExpression.dataType
 

@@ -17,10 +17,10 @@ import org.apache.spark.sql.types._
   * embarrassingly parallel with no data shuffle: only tiny aggregate
   * buffers cross the wire.
   *
-  * Raw (M2, M3, M4) come straight from the [[MomentsAgg]] kernel (one
-  * order-4 Pébay buffer per column — the reference's StatsPojo.reduce,
-  * StatsPojo.java:101-155); count, mean, min and max from `count`,
-  * `avg`, `min` and `max`.
+  * The numeric-value count and raw (M2, M3, M4) come straight from the
+  * [[MomentsAgg]] kernel (one order-4 Pébay buffer per column — the
+  * reference's StatsPojo.reduce, StatsPojo.java:101-155); mean, min and
+  * max from `avg`, `min` and `max`.
   *
   * A column gets only the aggregates that apply to its type: no
   * constant columns stand in for a moment, length, empty count or
@@ -88,7 +88,6 @@ object NumericProfiler {
     val p = s"c${i}_"
     val c = column(f.name)
     val numeric = numericValue(f.name, f.dataType).toSeq.flatMap(dc => Seq(
-      count(dc).as(s"${p}n"),
       min(dc).as(s"${p}min"),
       max(dc).as(s"${p}max"),
       avg(dc).as(s"${p}avg"),
@@ -133,12 +132,9 @@ object NumericProfiler {
     val rowCount = getL("row_count")
     val cols = schema.fields.zipWithIndex.map { case (f, i) =>
       val p = s"c${i}_"
-      val n = getL(s"${p}n")
-      val m =
-        if (n == 0L) Moments.zero
-        else {
-          val k = row.getStruct(row.fieldIndex(s"${p}moments"))
-          Moments(n, getD(s"${p}avg"), k.getAs[Double]("m2"),
+      val m = opt[Row](s"${p}moments").filter(_.getAs[Long]("n") > 0L)
+        .fold(Moments.zero) { k =>
+          Moments(k.getAs[Long]("n"), getD(s"${p}avg"), k.getAs[Double]("m2"),
             k.getAs[Double]("m3"), k.getAs[Double]("m4"),
             getD(s"${p}min"), getD(s"${p}max"))
         }

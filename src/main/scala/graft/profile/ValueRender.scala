@@ -41,27 +41,4 @@ object ValueRender {
       bd.toString.replaceAll("0*E", "E").replace("E+", "E")
     }
   }
-
-  /** Rendered-value length, type-directed
-    * (reference: StatsPojo.java:403-433). Returns -1 for "no length"
-    * (null / date — reference returns null there). */
-  def lengthOf(v: Any): Int = v match {
-    case null                => -1
-    case _: java.sql.Date    => -1
-    case _: java.sql.Timestamp => -1
-    case c: Char             => 1
-    case s: String           => s.length
-    case i: Int              => i.toString.length
-    case l: Long             => l.toString.length
-    case b: Boolean          => if (b) 4 else 5
-    case d: Double           => doubleAsStr(d).length
-    case f: Float            => floatAsStr(f).length
-    case x: BigDecimal       => bigDecimalAsStr(x).length
-    case x: scala.math.BigDecimal => bigDecimalAsStr(x.bigDecimal).length
-    case s: Short            => s.toString.length
-    case b: Byte             => b.toString.length
-    case other =>
-      throw new IllegalArgumentException(
-        s"Class ${other.getClass.getCanonicalName} not handled yet")
-  }
 }

@@ -179,9 +179,7 @@ object CurationQueries {
     * identical snapshot rollup, row for row. */
   def streamCdcApply(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-      val schema = spark.read.parquet(s"$dir/orders.parquet").schema
-      val src = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet").parquet(dir)
+      val src = streamParquet(spark, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_orderpriority"), col("o_totalprice"))
       val k = col("o_orderkey")
@@ -196,17 +194,10 @@ object CurationQueries {
           .unionByName(part(k % CdcUpdMod === 0 && k % CdcDelMod =!= 0, k, 1, "U", p + 10d))
           .unionByName(part(k % CdcUpd2Mod === 0 && k % CdcDelMod =!= 0, k, 2, "U", p + 20d))
           .unionByName(part(k % CdcInsMod === 0, k + CdcInsOffset, 1, "I", p + 5d))
-      try spark.catalog.dropTempView("stream_cdc_frontier")
-      catch { case _: Throwable => () }
-      val q = changelog.groupBy("o_orderkey")
+      val state = changelog.groupBy("o_orderkey")
         .agg(max(struct(col("seq"), col("op"), col("o_orderstatus"),
           col("o_orderpriority"), col("o_totalprice"))).as("w"))
-        .writeStream.format("memory").queryName("stream_cdc_frontier")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      QueryUtil.awaitOrFail(q)
-      val frontier = spark.table("stream_cdc_frontier")
+      val frontier = drain(state, "stream_cdc_frontier", "complete")
         .select(col("o_orderkey"), col("w.op").as("__op"),
           col("w.o_orderstatus").as("__new_st"),
           col("w.o_totalprice").as("__new_p"))
@@ -2340,9 +2331,7 @@ object CurationQueries {
         .withColumn("seen", lit(1))
         .localCheckpoint(true)
       try {
-        val schema = batch.schema
-        val src = spark.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
+        val src = streamParquet(spark, s"$dir/documents.parquet")
         // spread BEFORE the shingle explode: the single-file bench corpus
         // scans as one input split, so without it the whole eval-side
         // shingle transform runs as ONE task inside the micro-batch
@@ -2356,18 +2345,11 @@ object CurationQueries {
             explode(Hashing.wordShingles(lower(trim(col("text"))), NovGramK))
               .as("sh"))
           .select(col("doc_id"), col("source"), Hashing.h60(col("sh")).as("h"))
-        try spark.catalog.dropTempView("stream_novelty_result")
-        catch { case _: Throwable => () }
-        val q = ev.join(trainSet, Seq("h"), "left_outer")
+        val audit = ev.join(trainSet, Seq("h"), "left_outer")
           .groupBy("doc_id", "source")
           .agg(count(lit(1)).as("n_grams"),
             sum(when(col("seen").isNull, 1L).otherwise(0L)).as("n_novel"))
-          .writeStream.format("memory").queryName("stream_novelty_result")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        QueryUtil.awaitOrFail(q)
-        val out = spark.table("stream_novelty_result")
+        val out = drain(audit, "stream_novelty_result", "complete")
           .select(col("doc_id"), col("source"), col("n_grams"), col("n_novel"))
           .withColumn("novelty_pm", expr("(1000 * n_novel) div n_grams"))
           .orderBy("doc_id")

@@ -170,13 +170,10 @@ object ExtendedQueries {
     * against a batch SQL oracle. */
   def streamMoments(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-    try spark.catalog.dropTempView("stream_moments_result") catch { case _: Throwable => () }
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .withColumn("event_ts", QueryUtil.eventTs(schema, "ts"))
+    val src = streamParquet(spark, s"$dir/events.parquet")
     val agg = graft.streaming.StreamingProfile.windowedMoments(
-        src, "event_ts", "event_type", "value", "1 hour", "10 minutes")
+        src.withColumn("event_ts", eventTs(src)), "event_ts", "event_type", "value",
+        "1 hour", "10 minutes")
       .select(
         unix_seconds(col("window_start")).as("hour_epoch"),
         col("event_type"), col("n"),
@@ -204,13 +201,7 @@ object ExtendedQueries {
         },
         r6(col("min")).as("vmin"),
         r6(col("max")).as("vmax"))
-    val q = agg.writeStream
-      .format("memory").queryName("stream_moments_result")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    spark.table("stream_moments_result").orderBy("hour_epoch", "event_type")
+    drain(agg, "stream_moments_result", "complete").orderBy("hour_epoch", "event_type")
   }
 
   val streamMomentsSql: String =
@@ -250,12 +241,8 @@ object ExtendedQueries {
     * flips the boolean. */
   def streamQuantiles(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-    try spark.catalog.dropTempView("stream_quantiles_result") catch { case _: Throwable => () }
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .withColumn("event_ts", QueryUtil.eventTs(schema, "ts"))
-    val agg = src.withWatermark("event_ts", "10 minutes")
+    val src = streamParquet(spark, s"$dir/events.parquet")
+    val agg = src.withColumn("event_ts", eventTs(src)).withWatermark("event_ts", "10 minutes")
       .groupBy(window(col("event_ts"), "1 hour"), col("event_type"))
       .agg(count(col("value")).as("n"),
         percentile_approx(col("value"), array(lit(0.5), lit(0.95)),
@@ -263,13 +250,7 @@ object ExtendedQueries {
       .select(unix_seconds(col("window.start")).as("hour_epoch"),
         col("event_type"), col("n"),
         element_at(col("qs"), 1).as("p50"), element_at(col("qs"), 2).as("p95"))
-    val q = agg.writeStream
-      .format("memory").queryName("stream_quantiles_result")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    val got = spark.table("stream_quantiles_result")
+    val got = drain(agg, "stream_quantiles_result", "complete")
 
     // gate-only exact side: the true <=-rank of each returned quantile
     val ev = QueryUtil.table(spark, dir, "events")

@@ -2811,20 +2811,9 @@ object PipelineQueries {
     * window, same totals as the batch oracle. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    // file streaming sources take a directory; glob down to the one table
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .withColumn("event_ts", QueryUtil.eventTs(schema, "ts"))
-    // memory-sink table name must be fresh if re-run in one session
-    try spark.catalog.dropTempView("events_stream_result") catch { case _: Throwable => () }
-    val q = eventsWindowProfile(src).writeStream
-      .format("memory").queryName("events_stream_result")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    spark.table("events_stream_result").orderBy("hour_epoch", "event_type")
+    val src = streamParquet(spark, s"$dir/events.parquet")
+    drain(eventsWindowProfile(src.withColumn("event_ts", eventTs(src))),
+      "events_stream_result", "complete").orderBy("hour_epoch", "event_type")
   }
 
   /** q30's hourly profile per event type: a projection of
@@ -2869,18 +2858,9 @@ object PipelineQueries {
     * the cross-engine hash contract, see [[graft.text.Hashing]]). */
   def streamDedup(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    try spark.catalog.dropTempView("stream_dedup_result") catch { case _: Throwable => () }
-    val deduped = src.select(md5(col("text")).as("h")).dropDuplicates("h")
-    val q = deduped.writeStream
-      .format("memory").queryName("stream_dedup_result")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    spark.table("stream_dedup_result").orderBy("h")
+    val deduped = streamParquet(spark, s"$dir/documents.parquet")
+      .select(md5(col("text")).as("h")).dropDuplicates("h")
+    drain(deduped, "stream_dedup_result", "append").orderBy("h")
   }
 
   val streamDedupSql: String =
@@ -2903,24 +2883,15 @@ object PipelineQueries {
     * emitted first-seen row is deterministic under any partitioning. */
   def streamDedupWatermark(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    try spark.catalog.dropTempView("stream_dedup_wm_result") catch { case _: Throwable => () }
+    val src = streamParquet(spark, s"$dir/events.parquet")
     val deduped = src.select(
-        QueryUtil.eventTs(schema, "ts").as("event_ts"),
+        eventTs(src).as("event_ts"),
         col("event_type"), col("user_id"),
-        QueryUtil.eventHourEpoch(schema, "ts").as("hour_epoch"))
+        eventHourEpoch(src).as("hour_epoch"))
       .withWatermark("event_ts", "35 days")
       .dropDuplicatesWithinWatermark("event_type", "user_id", "hour_epoch")
       .select("event_type", "user_id", "hour_epoch")
-    val q = deduped.writeStream
-      .format("memory").queryName("stream_dedup_wm_result")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    spark.table("stream_dedup_wm_result")
+    drain(deduped, "stream_dedup_wm_result", "append")
       .orderBy("event_type", "user_id", "hour_epoch")
   }
 
@@ -2949,19 +2920,9 @@ object PipelineQueries {
     * update-mode memory sink holds exactly the final emission. */
   def streamTopK(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    try spark.catalog.dropTempView("stream_topk_result") catch { case _: Throwable => () }
-    val topk = graft.streaming.StreamingTopK.topK(
-      src, "event_type", "user_id", k = 5, capacity = 4096)
-    val q = topk.toDF().writeStream
-      .format("memory").queryName("stream_topk_result")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    spark.table("stream_topk_result").orderBy("key", "rank")
+    val topk = graft.streaming.StreamingTopK.topK(streamParquet(spark, s"$dir/events.parquet"),
+      "event_type", "user_id", k = 5, capacity = 4096)
+    drain(topk, "stream_topk_result", "update").orderBy("key", "rank")
   }
 
   val streamTopKSql: String =

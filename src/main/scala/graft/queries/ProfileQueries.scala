@@ -31,7 +31,7 @@ object ProfileQueries {
     * built-in aggregates are null: `var_samp` below two values, the
     * others below one (the library reports NaN or 0 there). */
   private def momentCells(i: Int): Map[String, Column] = {
-    val n = col(s"c${i}_n")
+    val n = col(s"c${i}_moments.n")
     MomentsAgg.derived(n, col(s"c${i}_moments")).map { case (k, v) =>
       k -> when(n > (if (k == "var_samp") 1L else 0L), v)
     }
@@ -52,7 +52,7 @@ object ProfileQueries {
     unpivot(NumericProfiler.aggregate(df), df.columns.toSeq, numericMetrics) { i =>
       val p = s"c${i}_"
       val m = momentCells(i)
-      Seq(col("row_count"), col(s"${p}n"), col(s"${p}min"), col(s"${p}max"),
+      Seq(col("row_count"), col(s"${p}moments.n"), col(s"${p}min"), col(s"${p}max"),
         col(s"${p}avg"), m("var_pop"), m("var_samp"), m("stddev_pop"),
         m("skew_pop"), m("kurt_pop"))
     }
@@ -117,7 +117,7 @@ object ProfileQueries {
         if (on) col(p + name) else otherwise
       val (nullL, nullD) = (lit(null).cast(LongType), lit(null).cast(DoubleType))
       Seq(col("row_count"), col(s"${p}nonnull"),
-        cell(string, "empty", lit(0L)), cell(numeric, "n", lit(0L)),
+        cell(string, "empty", lit(0L)), cell(numeric, "moments.n", lit(0L)),
         r6(cell(numeric, "min", nullD)), r6(cell(numeric, "max", nullD)),
         r6(cell(numeric, "avg", nullD)),
         r6(if (numeric) momentCells(i)("stddev_pop") else nullD),

@@ -271,26 +271,15 @@ object QualityQueries {
         .agg(count(lit(1)).as("n_ref"))
       // live side: the deterministically shifted current snapshot, as a
       // stream; state = the (feature, bucket) count table
-      val schema = o.schema
-      val src = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet").parquet(dir)
-      val cur = src
+      val cur = streamParquet(spark, s"$dir/orders.parquet")
         .filter(!(col("o_orderpriority") === "1-URGENT" &&
           col("o_orderkey") % DriftDropMod === 0))
         .withColumn("o_totalprice",
           when(col("o_orderkey") % DriftScaleMod === 0,
             col("o_totalprice") * lit(DriftScale))
           .otherwise(col("o_totalprice")))
-      try spark.catalog.dropTempView("stream_psi_cur")
-      catch { case _: Throwable => () }
-      val q = tagged(cur).groupBy("feature", "bucket")
-        .agg(count(lit(1)).as("n_cur"))
-        .writeStream.format("memory").queryName("stream_psi_cur")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      QueryUtil.awaitOrFail(q)
-      val curCounts = spark.table("stream_psi_cur")
+      val curCounts = drain(tagged(cur).groupBy("feature", "bucket")
+        .agg(count(lit(1)).as("n_cur")), "stream_psi_cur", "complete")
       val g = ref.join(curCounts, Seq("feature", "bucket"), "full_outer")
         .select(col("feature"), col("bucket"),
           coalesce(col("n_ref"), lit(0L)).as("n_ref"),
@@ -387,20 +376,11 @@ object QualityQueries {
     * hash. */
   def streamRateAnomalies(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
-      val src = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      try spark.catalog.dropTempView("stream_rate_hourly")
-      catch { case _: Throwable => () }
-      val q = src
-        .groupBy(col("event_type"), eventHourEpoch(schema, "ts").as("hr"))
+      val src = streamParquet(spark, s"$dir/events.parquet")
+      val hourly = src
+        .groupBy(col("event_type"), eventHourEpoch(src).as("hr"))
         .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName("stream_rate_hourly")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      QueryUtil.awaitOrFail(q)
-      anomalyReport(spark, spark.table("stream_rate_hourly"))
+      anomalyReport(spark, drain(hourly, "stream_rate_hourly", "complete"))
     }
 
   def streamRateAnomaliesSql: String = rateAnomaliesSql
@@ -422,9 +402,7 @@ object QualityQueries {
     * QualityQueriesSpec pins stream == batch compilation. */
   def streamValidation(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
-      val src = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val src = streamParquet(spark, s"$dir/events.parquet")
       val checks = streamChecks
       val aggs = checks.map(rc =>
         sum(when(rc.violation, lit(1L)).otherwise(lit(0L))).as(rc.name))
@@ -435,15 +413,7 @@ object QualityQueries {
         .select(explode(array(entries: _*)).as("e"))
         .select(col("e.check_name"), col("e.violations"),
           (col("e.violations") === 0L).as("passed"))
-      try spark.catalog.dropTempView("stream_validation_result")
-      catch { case _: Throwable => () }
-      val q = report.writeStream
-        .format("memory").queryName("stream_validation_result")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      QueryUtil.awaitOrFail(q)
-      spark.table("stream_validation_result").orderBy("check_name")
+      drain(report, "stream_validation_result", "complete").orderBy("check_name")
     }
 
   /** Shared by the streaming query and the spec's batch twin. */

@@ -1,7 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Shared helpers for the driver-facing query surface.
@@ -15,6 +16,11 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   *    order-independent, then back to DOUBLE for a stable type;
   *  - every query output has an explicit total ORDER BY;
   *  - aggregate/computed columns are aliased identically in both engines.
+  *
+  * It also holds the stream policy every finite streaming query shares:
+  * the state partitions of a stream session
+  * ([[withStreamStatePartitions]]) and the one replay path
+  * ([[streamParquet]] + [[drain]], fail-loud through [[awaitOrFail]]).
   */
 object QueryUtil {
 
@@ -111,25 +117,16 @@ object QueryUtil {
   /** `ts` as exact epoch micros (LONG column), whatever type the
     * parquet carries. */
   def eventTsUs(df: DataFrame, c: String = "ts"): Column =
-    eventTsUs(df.schema, c)
-  /** Schema variant, for streaming sources built from a probed schema. */
-  def eventTsUs(schema: StructType, c: String): Column =
-    expr(eventTsUsExpr(schema, c))
+    expr(eventTsUsExpr(df.schema, c))
 
   /** `ts` as a TIMESTAMP column (micros precision, floor from nanos). */
   def eventTs(df: DataFrame, c: String = "ts"): Column =
-    eventTs(df.schema, c)
-  /** Schema variant, for streaming sources built from a probed schema. */
-  def eventTs(schema: StructType, c: String): Column =
-    expr(s"timestamp_micros(${eventTsUsExpr(schema, c)})")
+    expr(s"timestamp_micros(${eventTsUsExpr(df.schema, c)})")
 
   /** `ts` floored to the hour, as epoch SECONDS (long) — the
     * engine-neutral hashable window key of q19. */
-  def eventHourEpoch(df: DataFrame, c: String = "ts"): Column =
-    eventHourEpoch(df.schema, c)
-  /** Schema variant, for streaming sources built from a probed schema. */
-  def eventHourEpoch(schema: StructType, c: String): Column = {
-    val us = eventTsUsExpr(schema, c)
+  def eventHourEpoch(df: DataFrame, c: String = "ts"): Column = {
+    val us = eventTsUsExpr(df.schema, c)
     expr(s"((($us) - pmod($us, 3600000000)) div 3600000000) * 3600")
   }
 
@@ -205,6 +202,49 @@ object QueryUtil {
     body(s)
   }
 
+  // ---- finite-stream replay -------------------------------------------
+  //
+  // Every finite streaming query of the library (the gated streaming
+  // queries and `ProfileMain --stream`) replays parquet that has already
+  // landed, runs to completion and reads its result back: a finite
+  // replay is the same query as the unbounded one, run until it has
+  // consumed what is there. [[streamParquet]] is the replay source and
+  // [[drain]] the run; together they are the one replay path.
+
+  /** `path` replayed as a stream, with the schema of its batch read.
+    * File streaming sources take a directory, so a parquet FILE becomes
+    * its directory plus a `pathGlobFilter` on its name (the one table
+    * among the others of a data directory); a directory is read as
+    * is. */
+  def streamParquet(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    val f = new java.io.File(path).getAbsoluteFile
+    if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
+    else reader.parquet(path)
+  }
+
+  /** Runs `stream` to completion into the memory sink `name` (an
+    * `AvailableNow` trigger consumes what has arrived, then stops) and
+    * returns the sink's table.
+    *
+    * The view `name` is dropped first. A memory sink registers its
+    * table as a temp view of the session, and the pooled stream session
+    * keeps the view of an earlier run under the same name; dropped, a
+    * run that fails before its sink registers leaves the name absent,
+    * never bound to the earlier run's rows. Dropping an absent view is
+    * a no-op.
+    *
+    * Fail-loud contract ([[awaitOrFail]]): a replay that does not drain
+    * in [[StreamDrainTimeoutMs]] is stopped and throws, never read as a
+    * partial sink. */
+  def drain(stream: Dataset[_], name: String, outputMode: String): DataFrame = {
+    val spark = stream.sparkSession
+    spark.catalog.dropTempView(name)
+    awaitOrFail(stream.writeStream.format("memory").queryName(name)
+      .outputMode(outputMode).trigger(Trigger.AvailableNow()).start())
+    spark.table(name)
+  }
+
   /** Streaming-gate drain timeout (ms): generous against contended
     * environments (the driver has run 10× slower than steady under
     * hypervisor load), small enough that a hung query fails the round
@@ -219,7 +259,7 @@ object QueryUtil {
     * q281's shared child session). A timeout now stops the query and
     * throws, so the driver's gate records an honest error row instead
     * of comparing truncated output. */
-  def awaitOrFail(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+  def awaitOrFail(q: StreamingQuery): Unit =
     if (!q.awaitTermination(StreamDrainTimeoutMs)) {
       try q.stop() catch { case _: Throwable => () }
       throw new IllegalStateException(

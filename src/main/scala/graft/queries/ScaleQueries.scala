@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{RangeJoin, SaltedAgg, Sampling}
 import graft.text.TextStats
@@ -196,10 +195,11 @@ object ScaleQueries {
     * (append mode); the batch oracle is the same join in SQL. */
   def streamRangeJoin(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .withColumn("event_ts", eventTs(schema, "ts"))
+    // two sources of one table: each side of the join reads its own
+    def src = {
+      val ev = streamParquet(spark, s"$dir/events.parquet")
+      ev.withColumn("event_ts", eventTs(ev))
+    }
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_ts").as("p_ts"), col("event_id"))
       .withWatermark("p_ts", "1 minute")
@@ -211,19 +211,12 @@ object ScaleQueries {
       col("user_id") === col("c_user_id") &&
         col("c_ts") > col("p_ts") - expr("INTERVAL 24 HOURS") &&
         col("c_ts") <= col("p_ts"))
-    try spark.catalog.dropTempView("stream_range_join_result")
-    catch { case _: Throwable => () }
-    val q = pairs
+    val out = pairs
       .select(col("user_id"), unix_micros(col("p_ts")).as("purchase_ts_us"),
         col("event_id"), unix_micros(col("c_ts")).as("click_ts_us"),
         col("click_value"))
-      .writeStream.format("memory").queryName("stream_range_join_result")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
     // (user_id, ts) is unique per side, so this ORDER BY is total
-    spark.table("stream_range_join_result")
+    drain(out, "stream_range_join_result", "append")
       .orderBy("user_id", "purchase_ts_us", "click_ts_us")
     }
 
@@ -396,26 +389,17 @@ object ScaleQueries {
     * the stream side is never buffered for the join. */
   def streamEnrich(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val src = streamParquet(spark, s"$dir/events.parquet")
     val dim = broadcast(
       table(spark, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
         .join(table(spark, dir, "nation"),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("n_name").as("nation")))
-    try spark.catalog.dropTempView("stream_enrich_result")
-    catch { case _: Throwable => () }
-    val q = src.join(dim, src("user_id") === dim("c_custkey"))
+    val rollup = src.join(dim, src("user_id") === dim("c_custkey"))
       .groupBy("nation")
       .agg(count(lit(1)).as("n_events"),
         moneySum(col("value")).as("sum_value"))
-      .writeStream.format("memory").queryName("stream_enrich_result")
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    spark.table("stream_enrich_result").orderBy("nation")
+    drain(rollup, "stream_enrich_result", "complete").orderBy("nation")
     }
 
   val streamEnrichSql: String =
@@ -580,14 +564,10 @@ object ScaleQueries {
     * withheld, not lost; the oracle encodes the same horizon. */
   def streamSessions(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .withColumn("event_ts", eventTs(schema, "ts"))
+    val ev = streamParquet(spark, s"$dir/events.parquet")
+    val sessions = ev
+      .withColumn("event_ts", eventTs(ev))
       .withWatermark("event_ts", "0 seconds")
-    try spark.catalog.dropTempView("stream_sessions_result")
-    catch { case _: Throwable => () }
-    val q = src
       .groupBy(col("user_id"),
         session_window(col("event_ts"), AnalyticsQueries.SessionGap))
       .agg(count(lit(1)).as("n_events"),
@@ -595,12 +575,7 @@ object ScaleQueries {
       .select(col("user_id"),
         unix_micros(col("session_window.start")).as("session_start_us"),
         col("n_events"), col("sum_value"))
-      .writeStream.format("memory").queryName("stream_sessions_result")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    spark.table("stream_sessions_result")
+    drain(sessions, "stream_sessions_result", "append")
       .orderBy("user_id", "session_start_us")
     }
 
@@ -1743,26 +1718,17 @@ object ScaleQueries {
     * event, or drifted past the bound all fail the hash. */
   def streamWindowDistinct(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .withColumn("event_ts", eventTs(schema, "ts"))
+    val src = streamParquet(spark, s"$dir/events.parquet")
+    val perDay = src
+      .withColumn("event_ts", eventTs(src))
       .withWatermark("event_ts", "1 hour")
-    try spark.catalog.dropTempView("stream_window_distinct_result")
-    catch { case _: Throwable => () }
-    val q = src
       .groupBy(window(col("event_ts"), "1 day"))
       .agg(hll_sketch_estimate(
           hll_sketch_agg(col("user_id"), lit(StreamDistinctLgK))).as("nd_users_est"),
         count(lit(1)).as("n_events"))
       .select(unix_seconds(col("window.start")).as("day_epoch"),
         col("nd_users_est"), col("n_events"))
-      .writeStream.format("memory").queryName("stream_window_distinct_result")
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    val streamed = spark.table("stream_window_distinct_result")
+    val streamed = drain(perDay, "stream_window_distinct_result", "complete")
     // gate-only exact side, trimmed: the arithmetic day bucket equals
     // window('1 day').start for epoch-aligned days and skips the window
     // struct machinery — this side exists only to materialize the
@@ -1800,20 +1766,17 @@ object ScaleQueries {
     * arithmetic in SQL). State per window: k longs. */
   def streamKmv(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .withColumn("event_ts", eventTs(schema, "ts"))
+    val raw = streamParquet(spark, s"$dir/events.parquet")
+    val src = raw
+      .withColumn("event_ts", eventTs(raw))
       .withWatermark("event_ts", "1 hour")
       .withColumn("h",
         expr("cast(conv(substring(md5(concat(cast(user_id as string), " +
           "':kmv')), 1, 8), 16, 10) as bigint)"))
-    try spark.catalog.dropTempView("stream_kmv_result")
-    catch { case _: Throwable => () }
     val bk = udaf(graft.operators.KmvSketch.bottomKAgg(AnalyticsQueries.KmvK),
       org.apache.spark.sql.Encoders.scalaLong)
     val k = AnalyticsQueries.KmvK
-    val q = src
+    val perDay = src
       .groupBy(window(col("event_ts"), "1 day"))
       .agg(bk(col("h")).as("bk"), count(lit(1)).as("n_events"))
       .select(unix_seconds(col("window.start")).as("day_epoch"),
@@ -1822,12 +1785,7 @@ object ScaleQueries {
           s"(${k - 1} * 4294967296) div element_at(bk, $k) " +
           "ELSE cast(size(bk) as bigint) END").as("est_kmv"),
         (size(col("bk")) < k).as("exact_regime"))
-      .writeStream.format("memory").queryName("stream_kmv_result")
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    val streamed = spark.table("stream_kmv_result")
+    val streamed = drain(perDay, "stream_kmv_result", "complete")
     val ev = table(spark, dir, "events")
     val exact = ev
       .groupBy(((eventTsUs(ev) - pmod(eventTsUs(ev), lit(86400000000L)))
@@ -3171,18 +3129,9 @@ object ScaleQueries {
   def streamHeavyHitters(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
       import graft.operators.MisraGries
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
-      val src = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-      try spark.catalog.dropTempView("stream_mg_result")
-      catch { case _: Throwable => () }
-      val q = src.select(MisraGries.entries(mgKey, MgK).as("cands"))
-        .writeStream.format("memory").queryName("stream_mg_result")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      QueryUtil.awaitOrFail(q)
-      val cands = spark.table("stream_mg_result")
+      val summary = streamParquet(spark, s"$dir/events.parquet")
+        .select(MisraGries.entries(mgKey, MgK).as("cands"))
+      val cands = drain(summary, "stream_mg_result", "complete")
         .select(explode(col("cands")).as("e"))
         .select(col("e.hkey").as("hkey"), col("e.mg_count").as("mg_count"))
       heavyHitterGate(
@@ -4036,15 +3985,7 @@ object ScaleQueries {
     val hits = ev.groupByKey(_.user_id)(Enc.scalaLong)
       .transformWithState(new SpendMilestones(MilestoneThresholds),
         TimeMode.EventTime(), OutputMode.Append())
-    try s.catalog.dropTempView("stream_milestones_result")
-    catch { case _: Throwable => () }
-    val q = hits.toDF()
-      .writeStream.format("memory").queryName("stream_milestones_result")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    s.table("stream_milestones_result")
+    drain(hits, "stream_milestones_result", "append")
       .orderBy("user_id", "threshold_cents")
   }
 
@@ -4094,9 +4035,7 @@ object ScaleQueries {
     import org.apache.spark.sql.{Encoders => Enc}
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import graft.streaming.{FollowupReport, FollowupTimers, PurchaseTick}
-    val staged = ensureOuterStreamEvents(s, dir)
-    val schema = s.read.parquet(staged).schema
-    val ev = s.readStream.schema(schema).parquet(staged)
+    val ev = streamParquet(s, ensureOuterStreamEvents(s, dir))
       .filter(col("event_type") === "purchase")
       .withColumn("event_ts", timestamp_micros(col("ts_us")))
       .withWatermark("event_ts", "1 minute")
@@ -4107,15 +4046,7 @@ object ScaleQueries {
     val reports = ev.groupByKey(_.user_id)(Enc.scalaLong)
       .transformWithState(new FollowupTimers(FollowupWindowUs),
         TimeMode.EventTime(), OutputMode.Append())
-    try s.catalog.dropTempView("stream_timers_result")
-    catch { case _: Throwable => () }
-    val q = reports.toDF()
-      .writeStream.format("memory").queryName("stream_timers_result")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    s.table("stream_timers_result")
+    drain(reports, "stream_timers_result", "append")
       .filter(col("user_id") =!= -1L)
       .orderBy("user_id", "purchase_ts_us")
   }
@@ -4152,13 +4083,12 @@ object ScaleQueries {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import graft.streaming.{SpendByType, TypedEvent, TypeTotal}
     val staged = ensureSentinelEvents(s, dir, MilestoneFlushUs)
-    val schema = s.read.parquet(staged).schema
     val maxAll = s.read.parquet(staged).agg(max("ts_us")).head.getLong(0)
     // flush 1 day past the last REAL event: above every real row, below
     // the sentinel-driven final watermark (maxReal + 45 d), unreachable
     // by any real-data watermark (≤ maxReal − 45 d)
     val flushAtMs = (maxAll - MilestoneFlushUs + 86400000000L) / 1000
-    val ev = s.readStream.schema(schema).parquet(staged)
+    val ev = streamParquet(s, staged)
       .withColumn("event_ts", timestamp_micros(col("ts_us")))
       .withWatermark("event_ts", MilestoneDelay)
       .select(col("user_id"), col("ts_us"), col("event_type"),
@@ -4169,15 +4099,7 @@ object ScaleQueries {
     val rolled = ev.groupByKey(_.user_id)(Enc.scalaLong)
       .transformWithState(new SpendByType(flushAtMs),
         TimeMode.EventTime(), OutputMode.Append())
-    try s.catalog.dropTempView("stream_type_rollup_result")
-    catch { case _: Throwable => () }
-    val q = rolled.toDF()
-      .writeStream.format("memory").queryName("stream_type_rollup_result")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    s.table("stream_type_rollup_result")
+    drain(rolled, "stream_type_rollup_result", "append")
       .filter(col("user_id") =!= -1L)
       .orderBy("user_id", "event_type")
   }
@@ -4231,9 +4153,7 @@ object ScaleQueries {
     * a window only emits once the watermark proves it closed. */
   def streamChained(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-    val staged = ensureDupedStreamEvents(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    val src = spark.readStream.schema(schema).parquet(staged)
+    val src = streamParquet(spark, ensureDupedStreamEvents(spark, dir))
       .withColumn("event_ts", timestamp_micros(col("ts_us")))
       .withWatermark("event_ts", "1 minute")
       .dropDuplicatesWithinWatermark("event_id")
@@ -4242,17 +4162,9 @@ object ScaleQueries {
       .groupBy(window(col("event_ts"), "1 day"))
       .agg(count(lit(1)).as("n_events"),
         sum(floor(col("value") * 100).cast("long")).as("sum_cents"))
-    try spark.catalog.dropTempView("stream_chained_result")
-    catch { case _: Throwable => () }
-    val q = agg
-      .select(unix_micros(col("window.start")).as("day_start_us"),
-        col("n_events"), col("sum_cents"))
-      .writeStream.format("memory").queryName("stream_chained_result")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    spark.table("stream_chained_result").orderBy("day_start_us")
+    drain(agg.select(unix_micros(col("window.start")).as("day_start_us"),
+        col("n_events"), col("sum_cents")), "stream_chained_result", "append")
+      .orderBy("day_start_us")
     }
 
   val streamChainedSql: String =
@@ -4750,8 +4662,7 @@ object ScaleQueries {
   def streamOuterJoin(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
     val staged = ensureOuterStreamEvents(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    def src = spark.readStream.schema(schema).parquet(staged)
+    def src = streamParquet(spark, staged)
       .withColumn("event_ts", timestamp_micros(col("ts_us")))
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_ts").as("p_ts"), col("event_id"))
@@ -4765,19 +4676,12 @@ object ScaleQueries {
         col("c_ts") > col("p_ts") - expr("INTERVAL 24 HOURS") &&
         col("c_ts") <= col("p_ts"),
       "leftOuter")
-    try spark.catalog.dropTempView("stream_outer_join_result")
-    catch { case _: Throwable => () }
-    val q = pairs
+    val out = pairs
       .select(col("user_id"), unix_micros(col("p_ts")).as("purchase_ts_us"),
         col("event_id"), unix_micros(col("c_ts")).as("click_ts_us"),
         col("click_value"))
-      .writeStream.format("memory").queryName("stream_outer_join_result")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
     // (user_id, ts) is unique per side → total order; sentinel rows out
-    spark.table("stream_outer_join_result")
+    drain(out, "stream_outer_join_result", "append")
       .filter(col("user_id") =!= -1L)
       .orderBy(col("user_id"), col("purchase_ts_us"),
         col("click_ts_us").asc_nulls_first)
@@ -4817,8 +4721,7 @@ object ScaleQueries {
   def streamSemiJoin(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
     val staged = ensureOuterStreamEvents(spark, dir)
-    val schema = spark.read.parquet(staged).schema
-    def src = spark.readStream.schema(schema).parquet(staged)
+    def src = streamParquet(spark, staged)
       .withColumn("event_ts", timestamp_micros(col("ts_us")))
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_ts").as("p_ts"), col("event_id"))
@@ -4831,17 +4734,9 @@ object ScaleQueries {
         col("c_ts") > col("p_ts") - expr("INTERVAL 24 HOURS") &&
         col("c_ts") <= col("p_ts"),
       "leftSemi")
-    try spark.catalog.dropTempView("stream_semi_join_result")
-    catch { case _: Throwable => () }
-    val q = matched
-      .select(col("user_id"), unix_micros(col("p_ts")).as("purchase_ts_us"),
-        col("event_id"))
-      .writeStream.format("memory").queryName("stream_semi_join_result")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    QueryUtil.awaitOrFail(q)
-    spark.table("stream_semi_join_result")
+    drain(matched.select(col("user_id"),
+        unix_micros(col("p_ts")).as("purchase_ts_us"), col("event_id")),
+        "stream_semi_join_result", "append")
       .filter(col("user_id") =!= -1L)
       .orderBy(col("user_id"), col("purchase_ts_us"), col("event_id"))
     }

@@ -560,27 +560,18 @@ object SeriesQueries {
     * the state table. Gate = q126's oracle VERBATIM. */
   def streamDecayedEngagement(spark: SparkSession, dir: String): DataFrame =
     withStreamStatePartitions(spark) { spark =>
-      val schema = spark.read.parquet(s"$dir/events.parquet").schema
-      val src = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-        .select(col("user_id"),
+      val ev = streamParquet(spark, s"$dir/events.parquet")
+      val src = ev.select(col("user_id"),
           floor(col("value") * 100d).cast("long").as("cents"),
-          expr(s"least(($DecayRefUs - ${eventTsUsExpr(schema, "ts")}) " +
+          expr(s"least(($DecayRefUs - ${eventTsUsExpr(ev.schema, "ts")}) " +
             s"div $DecayWeekUs, $DecayMaxWeeks)").as("age_w"))
-      try spark.catalog.dropTempView("stream_decay_state")
-      catch { case _: Throwable => () }
-      val q = src.groupBy("user_id")
+      val state = src.groupBy("user_id")
         .agg(count(lit(1)).as("n_events"),
           sum(col("cents")).as("cents_total"),
           sum(col("cents") *
             expr(s"shiftleft(1L, cast($DecayMaxWeeks - age_w as int))"))
             .as("decayed_score"))
-        .writeStream.format("memory").queryName("stream_decay_state")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      QueryUtil.awaitOrFail(q)
-      spark.table("stream_decay_state")
+      drain(state, "stream_decay_state", "complete")
         .orderBy(col("decayed_score").desc, col("user_id"))
         .limit(DecayTopK)
     }

@@ -14,7 +14,9 @@ import graft.queries.QueryUtil
 /** The state partitions of a stream: a stream session sizes them to the
   * cluster's task slots (at most [[QueryUtil.StreamStatePartitions]]),
   * a checkpoint keeps the count it was written with, and
-  * `windowedMoments` resumes its state from the checkpoint mid-input. */
+  * `windowedMoments` resumes its state from the checkpoint mid-input.
+  * [[QueryUtil.drain]], the finite replay of the library, reads back
+  * only its own run and leaves no stream running. */
 class StreamStateSpec extends SparkSpec {
 
   private val schema = "ts_s LONG, key STRING, tag STRING, value DOUBLE"
@@ -75,6 +77,22 @@ class StreamStateSpec extends SparkSpec {
         val (t, _) = drain(StreamingTopK.topK(in.events(s), "key", "tag", k = 3, capacity = 16),
           new File(root, "topk").getPath)
         assert((m, t) == (want, want))
+      }
+    }
+  }
+
+  test("drain: two replays under one sink name each return only their own rows") {
+    val s0 = spark
+    import s0.implicits._
+    withInput { (_, root) =>
+      QueryUtil.withStreamStatePartitions(spark) { s =>
+        for ((values, i) <- Seq(Seq(1L, 2L, 3L), Seq(10L, 20L)).zipWithIndex) {
+          val path = new File(root, s"table$i").getPath
+          values.toDF("v").write.parquet(path)
+          val got = QueryUtil.drain(QueryUtil.streamParquet(s, path), "drain_spec_result", "append")
+          assert(got.as[Long].collect().sorted.toSeq == values)
+          assert(s.streams.active.isEmpty && spark.streams.active.isEmpty)
+        }
       }
     }
   }
